@@ -1060,10 +1060,12 @@ def qgram_prefix_edit_pairs(
     ).select("s.*").unionByName(diag)
     # Probe side spread: the id table is a single input split at bench
     # SFs, and the expansion fan-out (output rows = the full result)
-    # would otherwise generate on ONE core (guide §2.5). Both build
-    # sides are dimension-scale for the registered callers (the name
-    # table and the bounded name-pair matches) — the same declared
-    # assumption the round-12 shape broadcast the string table under.
+    # would otherwise generate on ONE core (guide §2.5). The two build
+    # sides differ in scale: sym (the bounded name-pair matches) is
+    # dimension-scale, but ids_b is the id-level string table and so
+    # corpus-bounded. guarded_broadcast broadcasts each only under the
+    # size cap; above it the join falls back to a shuffle join that
+    # shuffles the full id table on name_b (= nb).
     ids_a = spread(
         strs.select(F.col("sid").alias("id_a"), F.col("txt").alias("name_a"))
     )

@@ -320,7 +320,23 @@ def _centroid_dists(vec_col: Column, cents: list[list[float]]) -> Column:
 
 def _nearest_cell(vec_col: Column, cents: list[list[float]]) -> Column:
     """0-based index of the nearest literal centroid; distance ties
-    resolve to the lowest cell id (array_position = first match)."""
+    resolve to the lowest cell id (array_position = first match).
+
+    Fixed-dim contract: a non-NULL vector whose length differs from
+    the centroids' raises instead of being silently padded or
+    truncated by zip_with (and, in lloyd_iterate, truncated to the
+    seed dimension by the per-position update)."""
+    dim = len(cents[0])
+    vec_col = F.when(
+        vec_col.isNull() | (F.size(vec_col) == dim), vec_col
+    ).otherwise(
+        F.raise_error(
+            F.format_string(
+                f"k-means vector length %d != centroid dim {dim}",
+                F.size(vec_col),
+            )
+        )
+    )
     d = _centroid_dists(vec_col, cents)
     return (F.array_position(d, F.array_min(d)) - 1).cast("int")
 
@@ -377,11 +393,11 @@ def lloyd_iterate(
         # BIT-IDENTICAL centroids: per position, array_sort over the
         # cluster's p-th components is the same sorted multiset the
         # old collect_list(val) group produced, so the sequential fold
-        # and the division are the identical doubles. NULL positions
-        # (vectors shorter than dim — outside every registered
-        # caller's corpus) are filtered per position and a position
-        # with no values drops out of the centroid, matching the old
-        # shape's absent-(cluster, pos) behavior. Buffer note: the
+        # and the division are the identical doubles. Vectors of any
+        # other length than dim raise in _nearest_cell; NULL components
+        # are filtered per position and a position with no values
+        # drops out of the centroid, matching the old shape's
+        # absent-(cluster, pos) behavior. Buffer note: the
         # per-group state is now the cluster's full vector list
         # (x dim vs the old per-position groups) — bounded by the FIT
         # relation, which is the sampled set at 100 TB (fit_filter).

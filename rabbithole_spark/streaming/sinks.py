@@ -385,14 +385,10 @@ def sharded_sql_sink(
             yield pa.RecordBatch.from_pydict({"rows": [written]})
 
         # repartition(N) round-robins the micro-batch across exactly N
-        # tasks (even shards, one small shuffle); the agg drives the
-        # job and brings back ONE row — no data crosses the driver
-        (
-            batch_df.repartition(shards)
-            .mapInArrow(write_partition, "rows long")
-            .agg(F.sum("rows").alias("written"))
-            .collect()
-        )
+        # tasks (even shards, one small shuffle); the collect drives the
+        # job and brings back N one-row counts — no data crosses the
+        # driver, and no extra stage runs just to sum them
+        batch_df.repartition(shards).mapInArrow(write_partition, "rows long").collect()
 
     return callback
 

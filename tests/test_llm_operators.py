@@ -256,6 +256,20 @@ def test_kmeans_invariants(spark):
     assert "LogicalRDD" not in sampled._jdf.queryExecution().analyzed().toString()
 
 
+def test_kmeans_ragged_vectors_fail_loudly(spark):
+    """Lloyd's fixed-dim contract: a vector longer or shorter than the
+    seed centroids raises instead of being silently truncated."""
+    from rabbithole_spark.operators.similarity import kmeans_fit_assign
+
+    for ragged in ([1.0, 2.0, 3.0], [1.0]):
+        df = spark.createDataFrame(
+            [(1, [0.0, 0.0]), (2, [4.0, 4.0]), (3, ragged)],
+            "vec_id long, embedding array<double>",
+        )
+        with pytest.raises(Exception, match="vector length .* != centroid dim 2"):
+            kmeans_fit_assign(df, "embedding", ["vec_id"], k=2, iters=1).collect()
+
+
 def test_decode_stub_and_fallback():
     """decode_stub really decodes when Pillow is importable, raises
     NotImplementedError otherwise; decode_or_fake always yields an
