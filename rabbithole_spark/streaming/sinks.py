@@ -640,15 +640,6 @@ def idempotent_jdbc_table_sink(
     return callback
 
 
-def parquet_sink_path(df: DataFrame, path: str, checkpoint: str):
-    """Durable exactly-once parquet appends (file-sink WAL)."""
-    return (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-    )
-
-
 def cdc_upsert_sink(path: str) -> Callable[[DataFrame, int], None]:
     """CDC merge sink, LSM-style: each micro-batch APPENDS its change
     rows (tagged with the batch id) instead of rewriting the table.

@@ -21,16 +21,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    ExpiredTimerInfo,
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    TimerValues,
-)
 
 __all__ = [
     "running_totals_with_state",
-    "count_or_time_batcher",
     "count_or_time_batcher_v1",
     "await_state_drained",
 ]
@@ -129,130 +122,21 @@ def running_totals_with_state(grouped_stream: DataFrame) -> DataFrame:
     )
 
 
-def count_or_time_batcher(
-    grouped_stream,
-    row_schema: str,
-    size_limit: int = 5,
-    time_limit_s: float = 15.0,
-) -> DataFrame:
-    """Exact count-OR-time micro-batch flush via ``transformWithState``
-    (Spark 4 state-v2) — full-fidelity parity with the reference
-    Batcher (src/rabbithole/batcher.py:54-126) that triggers alone can
-    only approximate (SURVEY.md §4.3.2):
-
-    - a batch's clock starts at its *first* message
-      (batcher.py:77-78) → we register a processing-time timer when a
-      row lands in an empty buffer;
-    - ``len(batch) >= size_limit`` flushes immediately and cancels the
-      timer (batcher.py:79-86) → emit + ``deleteTimer``;
-    - timer expiry flushes the partial batch (batcher.py:88-109) →
-      ``handleExpiredTimer``;
-    - every flush resets both counters (batcher.py:111-126) → buffer
-      ListState is cleared, the next row re-registers a timer.
-
-    Emitted rows carry the input columns plus ``flush_reason``
-    ('size' | 'time'). Per-key state is bounded by ``size_limit`` rows
-    (the buffer never exceeds it between batches), so state size is
-    O(n_keys x size_limit) regardless of stream volume — safe on a
-    1000-executor cluster; state lives in the (RocksDB-backed,
-    checkpointed) state store, not process memory like the reference's
-    unbounded Python list.
-
-    ``grouped_stream`` is a ``GroupedData`` over a *streaming*
-    DataFrame keyed by flow; ``row_schema`` is the DDL of the input
-    columns. Requires the RocksDB state store provider
-    (:func:`rabbithole_spark.streaming.metrics.use_rocksdb_state`).
-    """
-    # parse field names via the real DDL parser (like the v1 twin) —
-    # a naive split(',') would shear parameterized types like
-    # decimal(10,2) or map<string,int> into phantom fields
-    fields = [f.name for f in T.StructType.fromDDL(row_schema).fields]
-    time_limit_ms = int(time_limit_s * 1000)
-
-    class _Batcher(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.buf = handle.getListState("buf", row_schema)
-            self.timer = handle.getValueState("timer", "expiry_ms bigint")
-
-        def _cancel_timer(self) -> None:
-            if self.timer.exists():
-                (expiry,) = self.timer.get()
-                self.handle.deleteTimer(expiry)
-                self.timer.clear()
-
-        def handleInputRows(
-            self,
-            key: Any,
-            rows: Iterator[pd.DataFrame],
-            timerValues: TimerValues,
-        ) -> Iterator[pd.DataFrame]:
-            buffered = list(self.buf.get())
-            flushes: list[pd.DataFrame] = []
-            for pdf in rows:
-                for tup in pdf[fields].itertuples(index=False, name=None):
-                    buffered.append(tup)
-                    if len(buffered) == 1 and not self.timer.exists():
-                        expiry = (
-                            timerValues.getCurrentProcessingTimeInMs()
-                            + time_limit_ms
-                        )
-                        self.handle.registerTimer(expiry)
-                        self.timer.update((expiry,))
-                    if len(buffered) >= size_limit:
-                        out = pd.DataFrame(buffered, columns=fields)
-                        out["flush_reason"] = "size"
-                        flushes.append(out)
-                        buffered = []
-                        self._cancel_timer()
-            if buffered:
-                self.buf.put(buffered)
-            else:
-                # ListState.put([]) is rejected by the state store
-                # (ILLEGAL_STATE_STORE_VALUE.EMPTY_LIST_VALUE) — a key
-                # whose rows end exactly on a size-flush boundary must
-                # clear instead
-                self.buf.clear()
-            return iter(flushes)
-
-        def handleExpiredTimer(
-            self,
-            key: Any,
-            timerValues: TimerValues,
-            expiredTimerInfo: ExpiredTimerInfo,
-        ) -> Iterator[pd.DataFrame]:
-            buffered = list(self.buf.get())
-            self.buf.clear()
-            self.timer.clear()
-            if not buffered:  # reference warns + returns (batcher.py:103-105)
-                return iter([])
-            out = pd.DataFrame(buffered, columns=fields)
-            out["flush_reason"] = "time"
-            return iter([out])
-
-        def close(self) -> None:
-            pass
-
-    return grouped_stream.transformWithStateInPandas(
-        _Batcher(),
-        outputStructType=row_schema + ", flush_reason string",
-        outputMode="append",
-        timeMode="ProcessingTime",
-    )
-
-
 def count_or_time_batcher_v1(
     grouped_stream,
     row_schema: str,
     size_limit: int = 5,
     time_limit_s: float = 15.0,
 ) -> DataFrame:
-    """Count-OR-time batcher on the state-v1 API
-    (``applyInPandasWithState`` + ``ProcessingTimeTimeout``) — same
-    reference-Batcher semantics as :func:`count_or_time_batcher`
-    (src/rabbithole/batcher.py:54-126) without the protobuf runtime
-    dependency the state-v2 driver worker carries, so it runs on any
-    Spark deployment.
+    """Exact count-OR-time micro-batch flush on the state-v1 API
+    (``applyInPandasWithState`` + ``ProcessingTimeTimeout``), with the
+    reference Batcher's semantics (src/rabbithole/batcher.py:54-126):
+    a batch's clock starts at its first message, ``size_limit`` rows
+    flush at once tagged ``flush_reason='size'``, a timer expiry
+    flushes the partial batch tagged ``'time'``, and every flush resets
+    both counters. Per-key state is bounded by ``size_limit`` rows.
+    ``grouped_stream`` is a ``GroupedData`` over a streaming DataFrame
+    keyed by flow; ``row_schema`` is the DDL of the input columns.
 
     One subtlety: state-v1 clears a key's timeout every time the
     function is invoked for that key, so the remaining time to the

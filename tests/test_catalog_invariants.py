@@ -1,7 +1,7 @@
 """Registry-hygiene invariants for the external verification window.
 
 The external harness checks a 50-query prefix of the registry order per
-round. With 186+ registered queries, full-registry refresh takes ~4
+round. With 200 registered queries, full-registry refresh takes ~4
 rounds; these tests pin the ordering discipline so no query's external
 correctness row can silently go stale beyond that horizon.
 """
@@ -37,29 +37,6 @@ def _correctness_history() -> tuple[int, dict[str, int]]:
     return max_round, latest
 
 
-def test_priority_order_names_are_registered():
-    """Every name in _PRIORITY_ORDER refers to a registered query.
-
-    A typo here silently burns a window slot (unknown names are
-    ignored by load_all), so pin exact membership.
-    """
-    registered = set(catalog.load_all())
-    unknown = [n for n in catalog._PRIORITY_ORDER if n not in registered]
-    assert unknown == [], f"priority-order names not registered: {unknown}"
-
-
-def test_priority_order_has_no_duplicates():
-    po = catalog._PRIORITY_ORDER
-    dupes = [n for n in set(po) if po.count(n) > 1]
-    assert dupes == [], f"duplicate priority-order names: {dupes}"
-
-
-def test_registry_prefix_is_priority_order():
-    """load_all() must actually emit the priority order as its prefix."""
-    ordered = list(catalog.load_all())
-    assert tuple(ordered[: len(catalog._PRIORITY_ORDER)]) == catalog._PRIORITY_ORDER
-
-
 def test_no_query_staler_than_four_rounds():
     """Staleness invariant: with a 50-slot window, every registered
     query must either (a) have an external correctness row within the
@@ -68,32 +45,21 @@ def test_no_query_staler_than_four_rounds():
 
     This is the documented catalog.py ordering contract; breaking it
     means some query's last external verification silently ages out.
+    No name is exempt: the derived order queues the stalest block first.
     """
     max_round, latest = _correctness_history()
     if max_round == 0:
         pytest.skip("no CORRECTNESS_r*.json files present")
-    queued = set(catalog._PRIORITY_ORDER[:WINDOW])
+    ordered = list(catalog.load_all())
+    queued = set(ordered[:WINDOW])
     stale = []
-    for name in catalog.load_all():
+    for name in ordered:
         last = latest.get(name, 0)
         if last >= max_round - 3:  # checked within the last 4 rounds
             continue
         if name in queued:  # scheduled for the next window
             continue
         stale.append((name, last or "never"))
-    # REWRITE-PRIORITY allowance (round 13, catalog._REWRITE_PRIORITY):
-    # each prioritized rewritten query displaces exactly one untouched
-    # name's refresh by exactly one round, so up to len(_REWRITE_
-    # PRIORITY) names may sit one round past the horizon until the
-    # next rotation queues them. Anything older or more numerous is a
-    # genuine invariant break.
-    allowance = len(getattr(catalog, "_REWRITE_PRIORITY", ()))
-    excusable = [
-        (n, last) for n, last in stale
-        if isinstance(last, int) and last == max_round - 4
-    ]
-    if stale and len(stale) <= allowance and excusable == stale:
-        stale = []
     assert stale == [], (
         f"queries stale >4 rounds and not queued in the next "
         f"{WINDOW}-slot window: {stale}"
@@ -121,97 +87,29 @@ def test_never_checked_queries_lead_the_window():
     )
 
 
-def test_rotate_window_rule_on_synthetic_history():
-    """scripts/rotate_window.py encodes the rotation rule the invariant
-    above depends on: registry sorted by (latest external round, name),
-    never-checked names first, blocks alphabetical — and its rendering
-    round-trips through the same regex the script uses to splice
-    catalog.py."""
-    import re as _re
-    import sys
-
-    sys.path.insert(0, REPO)
-    from scripts.rotate_window import compute_order, render
-
+def test_window_rule_on_synthetic_history(monkeypatch):
+    """load_all() emits (latest external round, name) order: never-checked
+    names first, then the stalest block, alphabetical within a block."""
     names = ["q_c", "q_a", "q_b", "q_new", "q_old"]
-    latest = {"q_a": 3, "q_b": 2, "q_c": 3, "q_old": 1}  # q_new: never
-    order = compute_order(names, latest)
-    assert [(rnd, ns) for rnd, _, ns in order] == [
-        (0, ["q_new"]),
-        (1, ["q_old"]),
-        (2, ["q_b"]),
-        (3, ["q_a", "q_c"]),
-    ]
-    # rewrite priority (round 13): prioritized names jump ahead of the
-    # staleness blocks but never ahead of never-checked names
-    order_pri = compute_order(names, latest, priority=("q_a",))
-    assert [(rnd, ns) for rnd, _, ns in order_pri] == [
-        (0, ["q_new"]),
-        (3, ["q_a"]),
-        (1, ["q_old"]),
-        (2, ["q_b"]),
-        (3, ["q_c"]),
-    ]
-    assert order_pri[1][1].startswith("REWRITTEN")
-    rendered = render(order, next_round=4)
-    flat = _re.findall(r'"([a-z0-9_]+)"', rendered)
-    assert flat == ["q_new", "q_old", "q_b", "q_a", "q_c"]
-    assert rendered.startswith("_PRIORITY_ORDER = (")
-    assert rendered.rstrip().endswith(")")
-    # splice-compatibility with the script's own regex
-    m = _re.search(r"_PRIORITY_ORDER = \(.*?\n\)", rendered, _re.S)
-    assert m and m.group(0) == rendered
-
-
-def test_rotate_window_check_runs_against_live_catalog():
-    """--check must parse the live catalog and CORRECTNESS history and
-    return a *decision* (0 = rotated, 1 = rotation due), never a
-    mechanism failure (2 = could not locate/parse _PRIORITY_ORDER).
-    Exit 1 is a VALID state here: the driver drops a new CORRECTNESS
-    file at round end, which makes rotation "due" until the next
-    builder session runs the script — the enforced deadline remains
-    test_no_query_staler_than_four_rounds (which tolerates the
-    in-between rounds the 4-round horizon allows)."""
-    import subprocess
-    import sys
-
-    proc = subprocess.run(
-        [sys.executable, os.path.join(REPO, "scripts", "rotate_window.py"),
-         "--check"],
-        capture_output=True,
-        text=True,
-        timeout=120,
+    monkeypatch.setattr(catalog, "_QUERY_MODULES", ())
+    monkeypatch.setattr(
+        catalog,
+        "_REGISTRY",
+        {n: catalog.QuerySpec(name=n, fn=None, oracle=None) for n in names},
     )
-    assert proc.returncode in (0, 1), proc.stdout + proc.stderr
-    assert "could not locate" not in proc.stdout
+    # q_new: never checked
+    latest = {"q_a": 3, "q_b": 2, "q_c": 3, "q_old": 1}
+    monkeypatch.setattr(catalog, "_correctness_history", lambda: latest)
+    assert list(catalog.load_all()) == ["q_new", "q_old", "q_b", "q_a", "q_c"]
 
 
-def test_rotate_window_tuple_parse_ignores_comment_quotes():
-    """round-12 (ADVICE r11): the current/target comparison parses the
-    tuple with ast.literal_eval, so a hand-written comment containing
-    a double-quoted lowercase word cannot corrupt it — and the header
-    never claims more names ahead of the cut than the window holds."""
-    import sys
-
-    sys.path.insert(0, REPO)
-    from scripts.rotate_window import _tuple_names, render
-
-    region = (
-        '_PRIORITY_ORDER = (\n'
-        '    # note: "decoy" words in comments must not count\n'
-        '    "q_a",\n'
-        '    # another "trap" here\n'
-        '    "q_b",\n'
-        ')'
+def test_missing_query_module_fails_loudly(monkeypatch):
+    """A query module that cannot be imported must not silently drop its
+    queries from the surface."""
+    monkeypatch.setattr(
+        catalog,
+        "_QUERY_MODULES",
+        catalog._QUERY_MODULES + ("rabbithole_spark.queries.no_such_module",),
     )
-    assert _tuple_names(region) == ["q_a", "q_b"]
-    # header clamp: 3 one-name blocks against a window of 2 must say
-    # 2 names fill the window, not 3
-    order = [
-        (1, "latest external row: round 1", ["q_x"]),
-        (2, "latest external row: round 2", ["q_y"]),
-        (3, "latest external row: round 3", ["q_z"]),
-    ]
-    rendered = render(order, next_round=4, window=2)
-    assert "(2 names fill the window)" in rendered
-    assert _tuple_names(rendered) == ["q_x", "q_y", "q_z"]
+    with pytest.raises(ModuleNotFoundError):
+        catalog.load_all()
