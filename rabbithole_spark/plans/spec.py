@@ -33,6 +33,7 @@ from rabbithole_spark.streaming.sinks import (
     idempotent_jdbc_table_sink,
     jdbc_table_sink,
     sharded_parquet_sink,
+    # keep module-global: perfbench/run.py swaps it to time each callback
     sharded_sql_sink,
     sql_sink,
 )
@@ -271,6 +272,9 @@ def compile_pipeline(
         # sink type (batcher.py's documented trigger mapping), reusing
         # BatchPolicy.trigger instead of hand-building the string here
         trigger_kwargs = spec.policy.trigger
+        # foreachBatch outputs only build their per-batch callback; one
+        # writer_factory below wraps whichever one the branch chose
+        callback = None
 
         if dst.type == "sql":
             query = dst_ref.kwargs.get("query")
@@ -280,34 +284,24 @@ def compile_pipeline(
             # the driver-funnel single-connection sink to the
             # partition-parallel sharded writer — same query/parameter
             # contract, N sqlite shard files written executor-side
-            # (sinks.sharded_sql_sink; ``setup`` DDL runs per shard)
+            # (sinks.sharded_sql_sink; ``setup`` DDL runs per shard).
+            # setup applies to the funnel too — a flow moving from
+            # shards=N to shards=1 must not silently lose its DDL and
+            # have the error-swallow drop every batch on a missing table
             merged_sql = {**dst.kwargs, **dst_ref.kwargs}
             shards = int(merged_sql.get("shards", 1))
+            sql_kwargs = dict(
+                policy=spec.policy,
+                positional=mapper.positional,
+                setup=merged_sql.get("setup"),
+            )
+            sql_url = _require(dst.kwargs, "url", dst.name)
             if shards > 1:
                 callback = sharded_sql_sink(
-                    _require(dst.kwargs, "url", dst.name),
-                    query,
-                    shards=shards,
-                    policy=spec.policy,
-                    positional=mapper.positional,
-                    setup=merged_sql.get("setup"),
+                    sql_url, query, shards=shards, **sql_kwargs
                 )
             else:
-                # setup applies here too — a flow moving from shards=N
-                # to shards=1 must not silently lose its DDL and have
-                # the error-swallow drop every batch on a missing table
-                callback = sql_sink(
-                    _require(dst.kwargs, "url", dst.name),
-                    query,
-                    policy=spec.policy,
-                    positional=mapper.positional,
-                    setup=merged_sql.get("setup"),
-                )
-
-            def writer_factory(df: DataFrame, _cb=callback):
-                return df.writeStream.foreachBatch(_cb).trigger(
-                    **trigger_kwargs
-                )
+                callback = sql_sink(sql_url, query, **sql_kwargs)
 
         elif dst.type == "jdbc":
             # server-database sink, the scale path past sqlite: plain
@@ -320,7 +314,6 @@ def compile_pipeline(
             merged = {**dst.kwargs, **dst_ref.kwargs}
             jdbc_url = _require(dst.kwargs, "url", dst.name)
             jdbc_table = _require(merged, "table", dst.name)
-            jdbc_driver = merged.get("driver")
             # every remaining kwarg (user, password, ssl, ...) is a
             # JDBC option, forwarded to BOTH the Spark writer and (on
             # the idempotent path) the publish connection's Properties
@@ -329,36 +322,21 @@ def compile_pipeline(
                 k: v for k, v in merged.items() if k not in _reserved
             }
             if merged.get("idempotent"):
-
-                def writer_factory(
-                    df: DataFrame,
-                    _url=jdbc_url,
-                    _tbl=jdbc_table,
-                    _drv=jdbc_driver,
-                    _opts=jdbc_options,
-                ):
-                    cb = idempotent_jdbc_table_sink(
-                        _url,
-                        _tbl,
-                        list(df.columns),
-                        driver=_drv,
-                        options={
-                            k: v for k, v in _opts.items() if k != "driver"
-                        },
-                    )
-                    return df.writeStream.foreachBatch(cb).trigger(
-                        **trigger_kwargs
-                    )
-
+                # the mapper has already resolved the stream's schema,
+                # so reading its columns here connects to nothing
+                callback = idempotent_jdbc_table_sink(
+                    jdbc_url,
+                    jdbc_table,
+                    list(mapped.columns),
+                    driver=merged.get("driver"),
+                    options={
+                        k: v for k, v in jdbc_options.items() if k != "driver"
+                    },
+                )
             else:
                 callback = jdbc_table_sink(
                     jdbc_url, jdbc_table, options=jdbc_options
                 )
-
-                def writer_factory(df: DataFrame, _cb=callback):
-                    return df.writeStream.foreachBatch(_cb).trigger(
-                        **trigger_kwargs
-                    )
 
         elif dst.type == "parquet":
             # ``shards: N`` (block- or flow-level; flow wins) mirrors
@@ -372,13 +350,7 @@ def compile_pipeline(
             pq_shards = int(merged_pq.get("shards", 1))
             pq_path = _require(dst.kwargs, "path", dst.name)
             if pq_shards > 1:
-                pq_callback = sharded_parquet_sink(pq_path, shards=pq_shards)
-
-                def writer_factory(df: DataFrame, _cb=pq_callback):
-                    return df.writeStream.foreachBatch(_cb).trigger(
-                        **trigger_kwargs
-                    )
-
+                callback = sharded_parquet_sink(pq_path, shards=pq_shards)
             else:
 
                 def writer_factory(df: DataFrame, _path=pq_path):
@@ -426,6 +398,13 @@ def compile_pipeline(
 
         else:
             raise PipelineError(f"Block {dst.name!r} is not an output type")
+
+        if callback is not None:
+
+            def writer_factory(df: DataFrame, _cb=callback):
+                return df.writeStream.foreachBatch(_cb).trigger(
+                    **trigger_kwargs
+                )
 
         runners.append(
             FlowRunner(

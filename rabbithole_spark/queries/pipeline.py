@@ -125,16 +125,12 @@ def _replay_state_partitions(spark, sf_dir: str) -> int:
     overhead; 8 partitions run the identical query in 2.4 s. Derive
     ~16 MB of scanned input per state partition with a parallelism/4
     floor, capped at the session's batch shuffle width (at cluster
-    scale the cap binds and state width tracks the batch tuning;
-    RABBITHOLE_STREAM_STATE_PARTITIONS overrides for deployments that
-    pin state width explicitly). Results are partitioning-invariant —
+    scale the cap binds and state width tracks the batch tuning).
+    Results are partitioning-invariant —
     every replay query's output is keyed arithmetic or watermark
     semantics, both independent of which store instance holds a key —
     and the oracle sweep + driver correctness runs execute THIS
     derivation at every SF."""
-    env = os.environ.get("RABBITHOLE_STREAM_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     floor = max(4, spark.sparkContext.defaultParallelism // 4)
     try:
@@ -144,14 +140,14 @@ def _replay_state_partitions(spark, sf_dir: str) -> int:
     return max(min(floor, cap), min(cap, (nbytes >> 24) + 1))
 
 
-def _memory_sinktable(spark, df, prefix: str, mode: str,
-                       timeout: float = 300.0, sf_dir: str | None = None):
+def _memory_sinktable(spark, df, prefix: str, mode: str, sf_dir: str,
+                       wait=lambda q: q.awaitTermination(300.0)):
     """Run a bounded (AvailableNow) stream into a memory sink and
-    return its table. awaitTermination(timeout) returns False on
-    timeout WITHOUT stopping the query (round-9 review): the old
-    bare q.awaitTermination(300) would silently hand back a PARTIAL
-    memory table on a slow box (a false hash mismatch) while the
-    still-active query kept contending with everything after it —
+    return its table. ``wait(query)`` blocks until the stream is done
+    and returns False on timeout (awaitTermination does so WITHOUT
+    stopping the query). Ignoring that False would silently hand back
+    a PARTIAL memory table on a slow box (a false hash mismatch) while
+    the still-active query kept contending with everything after it —
     raise instead, and always stop a still-active query."""
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
     ckpt = _replay_ckpt_dir()
@@ -169,20 +165,14 @@ def _memory_sinktable(spark, df, prefix: str, mode: str,
     # from the driver — the registry has no concurrent-start path)
     shuffle_conf = "spark.sql.shuffle.partitions"
     old_shuffle = spark.conf.get(shuffle_conf)
-    if sf_dir is not None:
-        spark.conf.set(
-            shuffle_conf, str(_replay_state_partitions(spark, sf_dir))
-        )
+    spark.conf.set(shuffle_conf, str(_replay_state_partitions(spark, sf_dir)))
     try:
         q = writer.start()
     finally:
-        if sf_dir is not None:
-            spark.conf.set(shuffle_conf, old_shuffle)
+        spark.conf.set(shuffle_conf, old_shuffle)
     try:
-        if not q.awaitTermination(timeout):
-            raise TimeoutError(
-                f"bounded stream {name} still running after {timeout}s"
-            )
+        if not wait(q):
+            raise TimeoutError(f"bounded stream {name} did not finish in time")
     finally:
         if q.isActive:
             q.stop()
@@ -393,7 +383,6 @@ def _run_count_or_time_batcher(spark: SparkSession, sf_dir: str) -> DataFrame:
         count_or_time_batcher_v1,
     )
 
-    name = f"stream_batcher_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir).select(
         "event_type", "event_id", "user_id"
     )
@@ -414,31 +403,12 @@ def _run_count_or_time_batcher(spark: SparkSession, sf_dir: str) -> DataFrame:
         # x2 queries sharing this config; guide §1.2).
         time_limit_s=0.75,
     )
-    ckpt = _replay_ckpt_dir()
-    writer = (
-        batched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
+    # availableNow does not end while timers are pending: stop once
+    # the batcher's state has drained
+    return _memory_sinktable(
+        spark, batched, "stream_batcher", "append", sf_dir,
+        wait=await_state_drained,
     )
-    if ckpt:
-        writer = writer.option("checkpointLocation", ckpt)
-    # same state-width derivation + conf restore as _memory_sinktable
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    old_shuffle = spark.conf.get(shuffle_conf)
-    spark.conf.set(
-        shuffle_conf, str(_replay_state_partitions(spark, sf_dir))
-    )
-    try:
-        q = writer.start()
-    finally:
-        spark.conf.set(shuffle_conf, old_shuffle)
-    try:
-        await_state_drained(q)
-    finally:
-        if ckpt:
-            shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
 
 
 _BATCHER_SIZES_ORACLE = """

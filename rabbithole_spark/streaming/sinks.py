@@ -139,6 +139,30 @@ def _arrow_params(tbl, positional: bool) -> list:
     return [dict(zip(names, vals)) for vals in zip(*cols)]
 
 
+def _sqlite_path(url: str) -> str:
+    """Absolute database path of a ``sqlite:///<path>`` sink URL.
+
+    ``sqlite:///:memory:`` is rejected: every sink opens a fresh
+    connection per batch (or per task), so an in-memory database would
+    be born empty each time and silently drop every row. A relative
+    path resolves DRIVER-side, here at construction: a callback
+    resolving it per batch follows later cwd changes, and an executor
+    task's cwd is an unpredictable scratch dir on a real cluster, where
+    the driver-side fold_sqlite_shards glob never looks."""
+    import os
+
+    if not url.startswith("sqlite:///"):
+        raise ValueError(f"sqlite sinks support sqlite:/// URLs, got {url!r}")
+    db_path = url[len("sqlite:///") :]
+    if db_path == ":memory:":
+        raise ValueError(
+            "sqlite:///:memory: cannot work with per-batch connections "
+            "(every micro-batch would see a brand-new empty database "
+            "and silently drop its rows) — use a file path"
+        )
+    return os.path.abspath(db_path)
+
+
 def sql_sink(
     url: str,
     query: str,
@@ -164,24 +188,11 @@ def sql_sink(
     stopping to apply (round-11 review finding).
 
     Supported URLs: ``sqlite:///<path>`` (stdlib sqlite3, FILE paths
-    only). ``sqlite:///:memory:`` is rejected: each micro-batch opens
-    a fresh connection, so an in-memory database would be born empty
-    every batch — executemany would fail on the missing table and the
-    error policy would silently drop 100% of the data. For server
-    databases use jdbc_table_sink — per-partition JDBC appends, the
-    scale path.
+    only; see :func:`_sqlite_path`). For server databases use
+    jdbc_table_sink — per-partition JDBC appends, the scale path.
     """
     policy = policy or BatchPolicy()
-
-    if not url.startswith("sqlite:///"):
-        raise ValueError(f"sql_sink supports sqlite:/// URLs, got {url!r}")
-    db_path = url[len("sqlite:///") :]
-    if db_path == ":memory:":
-        raise ValueError(
-            "sqlite:///:memory: cannot work with per-batch connections "
-            "(every micro-batch would see a brand-new empty database "
-            "and silently drop its rows) — use a file path"
-        )
+    db_path = _sqlite_path(url)
 
     def callback(batch_df: DataFrame, batch_id: int) -> None:
         import sqlite3
@@ -275,27 +286,12 @@ def sharded_sql_sink(
     Corollary: restarting a flow against existing shard files with a
     FRESH checkpoint replays batch ids from 0 and the markers will
     skip them — shard files share their checkpoint's lifetime (the
-    same contract as every batch-id-keyed idempotent_* sink here).
+    same contract as every batch-id-keyed sink here).
     """
-    import os
-
     policy = policy or BatchPolicy()
     if shards < 1:
         raise ValueError(f"shards must be >= 1, got {shards}")
-    if not url.startswith("sqlite:///"):
-        raise ValueError(f"sharded_sql_sink supports sqlite:/// URLs, got {url!r}")
-    db_path = url[len("sqlite:///") :]
-    if db_path == ":memory:":
-        raise ValueError(
-            "sqlite:///:memory: cannot work with per-task connections — "
-            "use a file path"
-        )
-    # resolve relative paths DRIVER-side at construction (ADVICE r11):
-    # the connect happens inside an executor task, and on a real
-    # cluster each task's cwd is an unpredictable executor scratch dir
-    # — a relative path would scatter shard files where the driver-side
-    # fold_sqlite_shards glob never looks
-    db_path = os.path.abspath(db_path)
+    db_path = _sqlite_path(url)
 
     def callback(batch_df: DataFrame, batch_id: int) -> None:
         chunks = policy.chunks
@@ -457,7 +453,7 @@ def fold_sqlite_shards(db_path: str, table: str, setup: str | None = None) -> in
 
 
 def jdbc_table_sink(
-    url: str, table: str, mode: str = "append", options: dict | None = None
+    url: str, table: str, options: dict | None = None
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch JDBC append — executors write partitions in parallel
     (connection per partition; no single-connection bottleneck like the
@@ -470,55 +466,10 @@ def jdbc_table_sink(
         for k, v in (options or {}).items():
             writer = writer.option(k, v)
         try:
-            writer.mode(mode).save()
+            writer.mode("append").save()
         except Exception as exc:
             LOGGER.error("JDBC write error (batch %s dropped): %s", batch_id, table)
             LOGGER.error(str(exc))
-
-    return callback
-
-
-def idempotent_sqlite_table_sink(
-    url: str, table: str, columns: list[str]
-) -> Callable[[DataFrame, int], None]:
-    """Exactly-once table append: batch-id-keyed transactional upsert.
-
-    Structured Streaming guarantees deterministic micro-batch ids; a
-    sink that (1) deletes any rows previously written for this batch id
-    and (2) inserts the batch rows tagged with it, inside ONE
-    transaction, makes replays (crash between write and checkpoint
-    commit) idempotent — upgrading sql_sink's at-most-once to
-    exactly-once (SURVEY.md §3.4 hard part #4). The target table needs
-    a ``__batch_id`` column. The same delete-then-insert pattern works
-    on any transactional JDBC store; per-partition parallel writes need
-    a staging table + single transactional swap instead.
-    """
-    if not url.startswith("sqlite:///"):
-        raise ValueError(f"sink supports sqlite:/// URLs, got {url!r}")
-    db_path = url[len("sqlite:///") :]
-    col_list = ", ".join(columns)
-    placeholders = ", ".join("?" for _ in columns)
-    insert = (
-        f"INSERT INTO {table} ({col_list}, __batch_id) "
-        f"VALUES ({placeholders}, ?)"
-    )
-
-    def callback(batch_df: DataFrame, batch_id: int) -> None:
-        import sqlite3
-
-        rows = [
-            r + (batch_id,)
-            for r in _batch_params(batch_df.select(*columns), positional=True)
-        ]
-        con = sqlite3.connect(db_path)
-        try:
-            with con:  # one transaction: replay-safe
-                con.execute(
-                    f"DELETE FROM {table} WHERE __batch_id = ?", (batch_id,)
-                )
-                con.executemany(insert, rows)
-        finally:
-            con.close()
 
     return callback
 
@@ -534,9 +485,7 @@ def idempotent_jdbc_table_sink(
     options: dict | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """DISTRIBUTED exactly-once JDBC sink: batch-id-keyed transactional
-    publish with no driver-side ``collect()`` anywhere in the path —
-    the scale upgrade of :func:`idempotent_sqlite_table_sink` (which
-    funnels every row through the driver; VERDICT r8 item 3).
+    publish with no driver-side ``collect()`` anywhere in the path.
 
     Shape (the classic staging-table two-step):
 
@@ -553,9 +502,9 @@ def idempotent_jdbc_table_sink(
        statements against identical staged rows — idempotent; a crash
        mid-transaction rolls back, leaving the previous commit intact.
 
-    The target table needs a ``__batch_id`` column (the sqlite sink's
-    contract), created ANSI-QUOTED lowercase (strict engines like
-    Derby reject bare leading-underscore identifiers). Identifier
+    The target table needs a ``__batch_id`` column, created
+    ANSI-QUOTED lowercase (strict engines like Derby reject bare
+    leading-underscore identifiers). Identifier
     case: Spark's JDBC writer creates the stage's columns quoted in
     the DataFrame's exact case, so the publish SELECT quotes them
     verbatim; the target's data columns are emitted UNQUOTED so the
@@ -753,44 +702,13 @@ def _swap_in_parquet(spark, df: DataFrame, path: str, tag: str) -> int:
     return n
 
 
-def partitioned_overwrite_sink(
-    path: str, partition_col: str = "__batch_id"
-) -> Callable[[DataFrame, int], None]:
-    """Exactly-once parquet sink via dynamic partition overwrite: each
-    micro-batch lands in its own partition directory keyed by batch id,
-    and ``overwrite`` in *dynamic* mode replaces only the partitions
-    present in the incoming data — so a replayed batch atomically
-    supersedes its own earlier (possibly partial) attempt and touches
-    nothing else. Idempotence without a transaction log or key lookup:
-    the object-store-native pattern for append-mostly streams, and the
-    cheaper sibling of :func:`idempotent_sqlite_table_sink` (which
-    keys deletes on batch id) and :func:`cdc_upsert_sink` (which
-    resolves at read time).
-
-    Downstream batch readers also get partition pruning on
-    ``partition_col`` for free (incremental consumption of one batch's
-    output is a directory scan, not a table scan).
-    """
-
-    def callback(batch_df: DataFrame, batch_id: int) -> None:
-        # per-WRITER option, not the session conf: mutating the global
-        # partitionOverwriteMode races concurrent queries in the same
-        # session (another callback's restore could flip this write to
-        # STATIC overwrite, deleting every previously committed
-        # partition) and leaks the mode to unrelated writes
-        (
-            batch_df.withColumn(partition_col, F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
-
-    return callback
+#: Partition column of :func:`sharded_parquet_sink` output: one
+#: ``__batch_id=<id>`` directory per micro-batch.
+_BATCH_COL = "__batch_id"
 
 
 def sharded_parquet_sink(
-    path: str, shards: int = 8, partition_col: str = "__batch_id"
+    path: str, shards: int = 8
 ) -> Callable[[DataFrame, int], None]:
     """Columnar twin of :func:`sharded_sql_sink` — N executor-parallel
     parquet writers per micro-batch, for readers that want a scan-able
@@ -807,13 +725,14 @@ def sharded_parquet_sink(
 
     Delivery is *exactly-once*, one grade stronger than the sqlite
     twin's marker-keyed skip: each batch lands in its own
-    ``partition_col=<batch_id>`` directory via DYNAMIC partition
-    overwrite, so a replayed or task-retried batch atomically
+    ``__batch_id=<batch_id>`` directory via DYNAMIC partition
+    overwrite, which replaces only the partitions present in the
+    incoming data — so a replayed or task-retried batch atomically
     supersedes its own earlier (possibly partial) attempt and touches
-    no other batch (:func:`partitioned_overwrite_sink`'s mechanism,
-    plus the shard-count contract). Speculation is safe here for free:
-    Spark's file commit protocol already arbitrates duplicate task
-    attempts.
+    no other batch. Idempotence without a transaction log or key
+    lookup: the object-store-native pattern for append-mostly streams.
+    Speculation is safe here for free: Spark's file commit protocol
+    already arbitrates duplicate task attempts.
 
     Reader contract mirrors the sqlite fold/union pair:
     :func:`read_parquet_shards` is the union (one partition-pruned
@@ -824,34 +743,32 @@ def sharded_parquet_sink(
         raise ValueError(f"shards must be >= 1, got {shards}")
 
     def callback(batch_df: DataFrame, batch_id: int) -> None:
+        # per-WRITER option, not the session conf: mutating the global
+        # partitionOverwriteMode races concurrent queries in the same
+        # session (another callback's restore could flip this write to
+        # STATIC overwrite, deleting every previously committed
+        # partition) and leaks the mode to unrelated writes
         (
-            batch_df.withColumn(partition_col, F.lit(batch_id))
+            batch_df.withColumn(_BATCH_COL, F.lit(batch_id))
             .repartition(shards)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
+            .partitionBy(_BATCH_COL)
             .parquet(path)
         )
 
     return callback
 
 
-def read_parquet_shards(
-    spark, path: str, partition_col: str = "__batch_id"
-) -> DataFrame:
+def read_parquet_shards(spark, path: str) -> DataFrame:
     """Union reader for :func:`sharded_parquet_sink` output: one scan
     over the batch-partitioned tree with the bookkeeping column
-    dropped. Incremental consumers instead filter on ``partition_col``
+    dropped. Incremental consumers instead filter on ``__batch_id``
     and get directory-level partition pruning for free."""
-    return spark.read.parquet(path).drop(partition_col)
+    return spark.read.parquet(path).drop(_BATCH_COL)
 
 
-def fold_parquet_shards(
-    spark,
-    path: str,
-    target_files: int | None = None,
-    partition_col: str = "__batch_id",
-) -> int:
+def fold_parquet_shards(spark, path: str, target_files: int | None = None) -> int:
     """Compact a :func:`sharded_parquet_sink` tree (one directory per
     micro-batch, ``shards`` part-files each) into a FLAT parquet
     directory — the columnar analogue of :func:`fold_sqlite_shards`,
@@ -867,7 +784,7 @@ def fold_parquet_shards(
     a post-fold stream restart needs a fresh checkpoint (the flat
     layout no longer has per-batch partitions to overwrite). Returns
     the folded row count."""
-    flat = spark.read.parquet(path).drop(partition_col)
+    flat = read_parquet_shards(spark, path)
     if target_files is not None:
         flat = flat.coalesce(target_files)
     return _swap_in_parquet(spark, flat, path, tag="fold")

@@ -53,10 +53,15 @@ def await_state_drained(query, timeout_s: float = 240.0, poll_s: float = 0.5) ->
                 if exc is not None:  # failed is not drained — surface it
                     raise exc
                 return True  # terminated naturally
+            if not seen_input:
+                # every progress, not just the last: timer batches run
+                # back to back, so the input batch can be overtaken
+                # between two polls and never show as the last one
+                seen_input = any(
+                    p.get("numInputRows", 0) > 0 for p in query.recentProgress
+                )
             progress = query.lastProgress
-            if progress:
-                batch_input = progress.get("numInputRows", 0)
-                seen_input = seen_input or batch_input > 0
+            if seen_input and progress:
                 state_rows = sum(
                     op.get("numRowsTotal", 0)
                     for op in progress.get("stateOperators") or []
@@ -64,7 +69,7 @@ def await_state_drained(query, timeout_s: float = 240.0, poll_s: float = 0.5) ->
                 # a no-data batch with empty state: sources are drained
                 # (else this batch would carry rows) and no timer can
                 # ever fire again — nothing more can be emitted
-                if seen_input and state_rows == 0 and batch_input == 0:
+                if state_rows == 0 and progress.get("numInputRows", 0) == 0:
                     return True
             _time.sleep(poll_s)
         return False

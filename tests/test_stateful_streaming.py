@@ -192,6 +192,44 @@ def test_time_flush_emits_partial_batch(spark, tmp_path):
             q.stop()
 
 
+def test_drain_wait_sees_input_batch_overtaken_by_timer_batches():
+    """The input batch can be followed by timer-only batches before the
+    wait polls, so it is never the last progress; the wait must still
+    see it, and stop the query once state is empty."""
+    from rabbithole_spark.streaming.stateful import await_state_drained
+
+    class Query:
+        isActive = True
+        recentProgress = [
+            {"numInputRows": 7, "stateOperators": [{"numRowsTotal": 3}]},
+            {"numInputRows": 0, "stateOperators": [{"numRowsTotal": 0}]},
+        ]
+        lastProgress = recentProgress[-1]
+
+        def stop(self):
+            self.isActive = False
+
+    q = Query()
+    assert await_state_drained(q, timeout_s=2, poll_s=0.01)
+    assert not q.isActive
+
+
+def test_batcher_drain_timeout_raises_and_stops_query(spark, monkeypatch):
+    """A batcher replay whose state never drains must raise like every
+    other bounded replay, not return a partial memory table, and must
+    leave no query running."""
+    from rabbithole_spark.queries import pipeline
+    from rabbithole_spark.streaming import stateful
+
+    monkeypatch.setattr(stateful, "await_state_drained", lambda q: False)
+    with pytest.raises(TimeoutError):
+        pipeline.stream_count_or_time_batcher(spark, SF)
+    assert not [
+        q for q in spark.streams.active
+        if (q.name or "").startswith("stream_batcher_")
+    ]
+
+
 def test_stream_stream_join_matches_batch_twin(spark):
     """The watermarked stream-stream interval join emits exactly the
     rows of its batch twin (AvailableNow drains the bounded source)."""

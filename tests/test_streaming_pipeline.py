@@ -834,35 +834,81 @@ def test_sharded_sink_duplicate_attempt_is_skipped(spark, tmp_path):
     assert len(rows) == 40
 
 
+@pytest.mark.parametrize("sink_name", ["sql_sink", "sharded_sql_sink"])
 def test_sharded_sink_resolves_relative_path_driver_side(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, sink_name
 ):
-    """round-12 (ADVICE r11): a relative sqlite path must be resolved
-    against the DRIVER's cwd at construction time — executor tasks run
-    in unpredictable cwds on a real cluster, and shard files written
-    there would never be found by fold_sqlite_shards' glob. Build the
-    sink in one cwd, invoke it from another: shards land in the first."""
+    """A relative sqlite path must be resolved against the DRIVER's cwd
+    at construction time, by the funnel and the sharded sink alike —
+    executor tasks run in unpredictable cwds on a real cluster, and
+    shard files written there would never be found by
+    fold_sqlite_shards' glob. Build the sink in one cwd, invoke it from
+    another: every row lands in the first."""
     import glob
-    import os
 
     from pyspark.sql import functions as F
 
-    from rabbithole_spark.streaming.sinks import sharded_sql_sink
+    from rabbithole_spark.streaming import sinks
 
     build_dir = tmp_path / "build_cwd"
     other_dir = tmp_path / "task_cwd"
     build_dir.mkdir()
     other_dir.mkdir()
     monkeypatch.chdir(build_dir)
-    cb = sharded_sql_sink(
+    extra = {"shards": 2} if sink_name == "sharded_sql_sink" else {}
+    cb = getattr(sinks, sink_name)(
         "sqlite:///rel.sqlite", "INSERT INTO t VALUES (?)",
-        shards=2, positional=True,
+        positional=True,
         setup="CREATE TABLE IF NOT EXISTS t (id INTEGER)",
+        **extra,
     )
     monkeypatch.chdir(other_dir)
     cb(spark.range(5).select(F.col("id")), 0)
-    assert glob.glob(str(build_dir / "rel.sqlite.shard-*"))
-    assert not glob.glob(str(other_dir / "rel.sqlite.shard-*"))
+    landed = []
+    for db in glob.glob(str(build_dir / "rel.sqlite*")):
+        con = sqlite3.connect(db)
+        landed.extend(con.execute("SELECT id FROM t").fetchall())
+        con.close()
+    assert sorted(landed) == [(i,) for i in range(5)]
+    assert not glob.glob(str(other_dir / "rel.sqlite*"))
+
+
+def test_compile_pipeline_builds_sharded_sink_through_module_global(
+    spark, spool, tmp_path, monkeypatch
+):
+    """The benchmark times sink callbacks by swapping
+    ``rabbithole_spark.plans.spec.sharded_sql_sink``; compile_pipeline
+    must keep building the ``shards:`` callback through that name."""
+    import rabbithole_spark.plans.spec as spec_mod
+
+    real = spec_mod.sharded_sql_sink
+    built, calls = [], []
+
+    def recording(*args, **kwargs):
+        callback = real(*args, **kwargs)
+        built.append(callback)
+
+        def wrapped(batch_df, batch_id):
+            calls.append(batch_id)
+            callback(batch_df, batch_id)
+
+        return wrapped
+
+    monkeypatch.setattr(spec_mod, "sharded_sql_sink", recording)
+    db_path = str(tmp_path / "out.sqlite")
+    cfg = _config(spool, db_path)
+    cfg["flows"][0][1]["kwargs"]["shards"] = 2
+    cfg["flows"][0][1]["kwargs"]["setup"] = (
+        "CREATE TABLE IF NOT EXISTS logs (timestamp TEXT, message TEXT)"
+    )
+    runners = compile_pipeline(
+        spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt")
+    )
+    assert len(built) == 1
+    for q in runners[0].start(available_now=True):
+        q.awaitTermination(120)
+    assert calls
+    assert len(_shard_rows(db_path, "SELECT message FROM logs")) == 7
 
 
 def test_sharded_parquet_sink_end_to_end(spark, spool, tmp_path):
