@@ -17,7 +17,7 @@ from typing import Any
 
 import duckdb
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from rabbithole_spark.session import TABLES
 
@@ -221,25 +221,3 @@ def compare(
         mismatches=mismatches,
     )
 
-
-def run_all(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> list[CompareReport]:
-    """Compare every catalog query that declares an oracle."""
-    from rabbithole_spark.catalog import load_all
-
-    specs = load_all()
-    con = duckdb_connect(sf_dir)
-    reports = []
-    for qname, spec in sorted(specs.items()):
-        if names and qname not in names:
-            continue
-        if spec.oracle is None:
-            continue
-        try:
-            reports.append(compare(qname, spec.fn(spark, sf_dir), spec.oracle, con))
-        except Exception as exc:  # surface, don't abort the sweep
-            reports.append(
-                CompareReport(qname, False, -1, -1, [f"exception: {exc}"])
-            )
-    return reports

@@ -12,16 +12,39 @@ tests/test_sql.py:53-134 — see FIXTURES.md §A1):
   else raises ValueError (sql.py:83-90),
 - ``parameters=None`` passes the raw message through.
 
-This engine evaluates the mapping as Spark columns (JVM-side
-``get_json_object`` / struct access inside codegen — no Python in the
-hot path), in two payload modes:
+This engine evaluates the mapping as Spark columns (JVM-side JSON
+parsing and struct access inside codegen, no Python in the hot path),
+in two payload modes:
 
 - **schemaless** (payload is a JSON string column): values come back as
-  strings (numbers unquoted, objects/arrays as compact JSON) — the
+  strings (numbers unquoted, objects/arrays as compact JSON), the
   dynamic-typing analogue of the reference's ``dict`` messages;
 - **typed** (payload is a StructType column, declared per flow): values
   keep their Spark types; nested structs/arrays serialize via
   ``to_json``.
+
+Schemaless payloads are parsed once per row. The mapped paths form a
+tree of key segments; it becomes a StructType whose mapped values are
+``StringType`` leaves, and a single ``from_json`` in its own projection
+parses the payload against it (built in the same select as the
+parameter columns, the optimizer would split it into one parse per
+top-level key). Consequences of reading keys from a parsed struct:
+
+- a repeated key keeps its **last** occurrence, as the reference's
+  ``json.loads`` does;
+- keys are matched exactly, so ``$``, ``[``, ``*``, spaces and
+  case-variant siblings (``Seq`` and ``seq``) are plain keys, as in
+  the reference's ``dict.get``. Fields are projected by position, so
+  case variants never make an ambiguous reference;
+- a struct-typed node is NULL when the payload holds anything but an
+  object there, including a string of JSON text
+  (``{"a": "{\\"b\\": 1}"}`` maps ``a.b`` to NULL).
+
+A node that is both a mapped value and a prefix of another mapped path
+(``count`` and ``count.unknown``) parses as text, and the deeper paths
+fall back to ``get_json_object`` on the payload. That path syntax
+returns the **first** of repeated keys and reads ``$``, ``[`` and
+``*`` as operators.
 """
 
 from __future__ import annotations
@@ -32,10 +55,58 @@ from pyspark.sql import types as T
 
 __all__ = ["ParametersMapper"]
 
+#: The parser features of ``get_json_object``, which decides a body's
+#: validity: NaN/Infinity tokens are malformed, raw control characters
+#: inside strings are accepted.
+_JSON_OPTIONS = {"allowNonNumericNumbers": "false", "allowUnquotedControlChars": "true"}
 
-def _json_path(payload: Column, path: str) -> Column:
-    """Schemaless dotted-path extraction (missing / through-scalar -> NULL)."""
-    return F.get_json_object(payload, "$." + path)
+#: Column holding the parsed payload between the two projections.
+_PARSED = "__mapper_parsed"
+
+
+class _Node:
+    """One key segment of the mapped paths."""
+
+    def __init__(self) -> None:
+        self.mapped = False  # some path ends here
+        self.children: dict[str, _Node] = {}
+
+
+def _path_tree(paths) -> _Node:
+    root = _Node()
+    for path in paths:
+        node = root
+        for segment in path.split("."):
+            node = node.children.setdefault(segment, _Node())
+        node.mapped = True
+    return root
+
+
+def _schema(node: _Node, positional: bool = False) -> T.StructType:
+    """The payload schema below ``node``: mapped nodes are text, the
+    others structs of their children. ``positional`` names the fields
+    ``_0, _1, ...`` instead of by key."""
+    return T.StructType(
+        [
+            T.StructField(
+                f"_{i}" if positional else key,
+                T.StringType() if child.mapped else _schema(child, positional),
+            )
+            for i, (key, child) in enumerate(node.children.items())
+        ]
+    )
+
+
+def _parsed_path(parsed: Column, root: _Node, path: str) -> Column | None:
+    """``path``'s field of the parsed payload, or None when the path
+    runs below a mapped node (which parsed as text)."""
+    node, column = root, parsed
+    for segment in path.split("."):
+        if node.mapped:
+            return None
+        column = column[f"_{list(node.children).index(segment)}"]
+        node = node.children[segment]
+    return column
 
 
 def _typed_path(payload: Column, path: str, dtype: T.DataType) -> Column:
@@ -75,18 +146,6 @@ class ParametersMapper:
                 f"Unexpected parameters type: {type(parameters).__name__!r}"
             )
 
-    def columns(
-        self, payload: Column, payload_type: T.DataType | None = None
-    ) -> list[Column]:
-        if self.items is None:
-            return [payload.alias("payload")]
-        if payload_type is not None and isinstance(payload_type, T.StructType):
-            return [
-                _typed_path(payload, path, payload_type).alias(name)
-                for name, path in self.items
-            ]
-        return [_json_path(payload, path).alias(name) for name, path in self.items]
-
     def apply(
         self,
         df: DataFrame,
@@ -94,10 +153,28 @@ class ParametersMapper:
         keep: list[str] | None = None,
     ) -> DataFrame:
         """Project ``df`` to the mapped parameter columns (plus ``keep``)."""
-        payload_type = df.schema[payload_col].dataType
-        typed = payload_type if isinstance(payload_type, T.StructType) else None
-        cols = self.columns(F.col(payload_col), typed)
         prefix = [F.col(c) for c in (keep or [])]
+        payload = F.col(payload_col)
+        if self.items is None:
+            return df.select(*prefix, payload.alias("payload"))
+        payload_type = df.schema[payload_col].dataType
+        if isinstance(payload_type, T.StructType):
+            return df.select(
+                *prefix,
+                *[
+                    _typed_path(payload, path, payload_type).alias(name)
+                    for name, path in self.items
+                ],
+            )
+        root = _path_tree(path for _, path in self.items)
+        parsed = F.from_json(payload, _schema(root), _JSON_OPTIONS)
+        df = df.withColumn(_PARSED, parsed.cast(_schema(root, positional=True)))
+        cols = []
+        for name, path in self.items:
+            col = _parsed_path(F.col(_PARSED), root, path)
+            if col is None:
+                col = F.get_json_object(payload, "$." + path)
+            cols.append(col.alias(name))
         return df.select(*prefix, *cols)
 
     @property

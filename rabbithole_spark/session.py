@@ -155,7 +155,3 @@ def refresh_tables(spark: SparkSession, sf_dir: str | None = None) -> None:
     for key in [k for k in cache if k[0] == prefix]:
         del cache[key]
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All registry tables as DataFrames keyed by name."""
-    return {name: table(spark, sf_dir, name) for name in TABLES}

@@ -2,7 +2,9 @@
 
 - decode_messages: content-type check + JSON validation; malformed
   deliveries are *marked*, not crashed on (amqp.py:101-109 parity —
-  nack-without-requeue becomes a dead-letter split).
+  nack-without-requeue becomes a dead-letter split). The validity check
+  is the only parse before the mapper's: good rows pass the body on
+  as ``payload`` unchanged.
 - sql_sink: parameterized-SQL foreachBatch sink; SQL errors are logged
   and the batch dropped, the stream continues (sql.py:99-105 parity,
   at-most-once per batch — documented).
@@ -26,40 +28,37 @@ JSON_CONTENT_TYPE = "application/json"
 
 
 def _is_valid_json(body: Column) -> Column:
-    # get_json_object('$') is NULL for unparseable bodies. The JSON
-    # literal `null` also maps to NULL — treated as invalid; the
-    # reference would deliver payload=None, an edge we document away.
+    # get_json_object('$') is NULL exactly when the body does not parse.
+    # The JSON literal `null` parses (to the text "null"), so a `null`
+    # body is a good row whose mapped parameters are all NULL.
     return F.get_json_object(body, "$").isNotNull()
 
 
-def decode_messages(
-    df: DataFrame,
-    body_col: str = "body",
-    content_type_col: str = "content_type",
-) -> DataFrame:
-    """Add ``payload`` (the validated JSON body) + ``dead_reason``.
+def decode_messages(df: DataFrame) -> DataFrame:
+    """Add ``dead_reason`` (NULL when the body is JSON) and
+    ``content_type_ok``.
 
-    dead_reason is NULL for good rows; bad rows keep the raw body for
-    the dead-letter sink. Content-type mismatch only *warns* in the
-    reference (amqp.py:101-103) — it still tries to parse; we mirror
-    that: only parse failure kills a row.
+    Bad rows keep the raw body for the dead-letter sink. Content-type
+    mismatch only *warns* in the reference (amqp.py:101-103) — it still
+    tries to parse; we mirror that: only parse failure kills a row.
     """
-    body = F.col(body_col)
-    valid = _is_valid_json(body)
     return df.withColumn(
-        "payload", F.when(valid, body)
-    ).withColumn(
         "dead_reason",
-        F.when(~valid, F.lit("undecodable body")),
+        F.when(~_is_valid_json(F.col("body")), F.lit("undecodable body")),
     ).withColumn(
         "content_type_ok",
-        F.coalesce(F.col(content_type_col) == JSON_CONTENT_TYPE, F.lit(False)),
+        F.coalesce(F.col("content_type") == JSON_CONTENT_TYPE, F.lit(False)),
     )
 
 
 def dead_letter_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(good, dead) — the streaming analogue of ack vs nack(requeue=False)."""
-    good = df.filter(F.col("dead_reason").isNull())
+    """(good, dead) — the streaming analogue of ack vs nack(requeue=False).
+
+    Good rows carry the validated body as ``payload``. It is the body
+    column itself, so the validity check runs once, in the filter."""
+    good = df.filter(F.col("dead_reason").isNull()).withColumn(
+        "payload", F.col("body")
+    )
     dead = df.filter(F.col("dead_reason").isNotNull())
     return good, dead
 

@@ -12,6 +12,18 @@ Reference parity map (SURVEY.md §2A):
 
 Message envelope (what the broker/spool delivers):
 ``exchange: string, content_type: string, body: string``.
+
+The spool reader parses each line once, with ``json_tuple``: a filter
+on a generator's output stays above it, so the exchange demux and the
+decode filter reuse that parse. (A ``from_json`` projection has its
+filters pushed below it, which re-parses the line once per filter.)
+Each line yields exactly one envelope, all NULL for a blank, garbage
+or non-object line, and an object-valued body comes back as compact
+JSON text. The file-source JSON reader is not an alternative: it
+drops blank lines, turns an array line into several messages and
+keeps an object body's raw spacing. ``json_tuple`` uses the parser
+of ``get_json_object``: raw control characters inside a string are
+accepted, and a NaN/Infinity token makes the line unparseable.
 """
 
 from __future__ import annotations
@@ -21,15 +33,16 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
-ENVELOPE_SCHEMA = StructType(
-    [
-        StructField("exchange", StringType()),
-        StructField("content_type", StringType()),
-        StructField("body", StringType()),
-    ]
-)
+ENVELOPE_FIELDS = ("exchange", "content_type", "body")
+
+
+def _envelopes(raw: DataFrame, exchange: str | None) -> DataFrame:
+    """One envelope row per spool line, optionally demuxed by exchange."""
+    env = raw.select(F.json_tuple("value", *ENVELOPE_FIELDS).alias(*ENVELOPE_FIELDS))
+    if exchange is not None:
+        env = env.filter(F.col("exchange") == exchange)
+    return env
 
 
 def read_spool_stream(
@@ -47,26 +60,14 @@ def read_spool_stream(
     reader = spark.readStream.format("text")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.load(path)
-    env = raw.select(F.from_json("value", ENVELOPE_SCHEMA).alias("env")).select(
-        "env.exchange", "env.content_type", "env.body"
-    )
-    if exchange is not None:
-        env = env.filter(F.col("exchange") == exchange)
-    return env
+    return _envelopes(reader.load(path), exchange)
 
 
 def read_spool_batch(
     spark: SparkSession, path: str, exchange: str | None = None
 ) -> DataFrame:
     """Batch twin of read_spool_stream (same plan, finite input)."""
-    raw = spark.read.format("text").load(path)
-    env = raw.select(F.from_json("value", ENVELOPE_SCHEMA).alias("env")).select(
-        "env.exchange", "env.content_type", "env.body"
-    )
-    if exchange is not None:
-        env = env.filter(F.col("exchange") == exchange)
-    return env
+    return _envelopes(spark.read.format("text").load(path), exchange)
 
 
 def write_spool_messages(path: str, messages: list[dict], filename: str) -> str:

@@ -109,3 +109,27 @@ def test_positional_tracks_declaration_form_not_name_prefix():
     assert ParametersMapper({"param_id": "id", "param_ts": "ts"}).positional is False
     assert ParametersMapper({}).positional is False
     assert ParametersMapper(None).positional is False
+
+
+def test_json_text_in_a_string_is_not_walked(spark):
+    """A string value holding JSON text is a scalar: walking into it is
+    NULL, as the reference's dict.get walk stops at a str."""
+    df = spark.createDataFrame([('{"a":"{\\"b\\":1}"}',)], ["payload"])
+    # a.b read from the parsed struct, where a is a struct-typed node
+    assert ParametersMapper({"ab": "a.b"}).apply(df).collect()[0].ab is None
+    # a.b read by get_json_object, because a is mapped too
+    row = ParametersMapper({"a": "a", "ab": "a.b"}).apply(df).collect()[0]
+    assert (row.a, row.ab) == ('{"b":1}', None)
+
+
+def test_case_variant_keys_are_distinct(spark):
+    """``Seq`` and ``seq`` are two keys, as in a Python dict; mapping
+    both must neither merge them nor raise an ambiguous reference."""
+    df = spark.createDataFrame(
+        [('{"Seq":1,"seq":2,"n":{"Seq":"x","seq":"y"}}',)], ["payload"]
+    )
+    mapper = ParametersMapper(
+        {"upper": "Seq", "lower": "seq", "n_upper": "n.Seq", "n_lower": "n.seq"}
+    )
+    row = mapper.apply(df).collect()[0]
+    assert (row.upper, row.lower, row.n_upper, row.n_lower) == ("1", "2", "x", "y")

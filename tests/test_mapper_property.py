@@ -2,11 +2,20 @@
 mapper agrees with a pure-Python transliteration of the reference's
 semantics (rabbithole sql.py:145-166) on arbitrary nested payloads:
 missing -> NULL, traversal through scalars -> NULL, dict/list values ->
-compact JSON string."""
+compact JSON string.
+
+The generated payloads hold the mapper's hazards: string values that
+are JSON object or array text, keys with ``$``, ``[``, ``*`` or a space,
+case-variant sibling keys (``Seq`` and ``seq``), and non-ASCII and
+escaped strings. Special-character keys sit only on paths that the
+parsed struct serves; a path below a node that is itself mapped (``a``
+and ``a.b``) goes through ``get_json_object``'s path syntax, so its
+keys are plain (see plans/mapper.py)."""
 
 from __future__ import annotations
 
 import json
+import re
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 
@@ -14,13 +23,21 @@ from pyspark.sql import functions as F
 
 from rabbithole_spark.plans.mapper import ParametersMapper
 
-_KEYS = ["a", "b", "c"]
-_PATHS = ["a", "b", "c", "a.b", "a.b.c", "b.a", "c.missing", "missing"]
+_KEYS = ["a", "b", "c", "Seq", "seq", "x y", "$k", "k[0]", "*"]
+_PATHS = [
+    # a, b and c are mapped and also prefixes of deeper mapped paths
+    "a", "b", "c", "a.b", "a.b.c", "b.a", "c.missing", "missing",
+    # exact keys, including case variants, read from the parsed struct
+    "Seq", "seq", "x y", "*",
+    # $k and k[0] are only prefixes: struct-typed nodes
+    "$k.a", "$k.Seq", "$k.seq", "k[0].x y", "k[0].*.b", "k[0].*.$k",
+]
 
 _scalars = st.one_of(
     st.integers(min_value=-(10**9), max_value=10**9),
     st.booleans(),
-    st.text(alphabet="xyz 123", max_size=8),
+    st.text(alphabet='xyz 1é😀"\\\n\t{}[]', max_size=8),
+    st.sampled_from(['{"b":1}', '[1,2]', '{"a": {"b": "x"}}', "{}", "null"]),
     st.none(),
 )
 
@@ -37,6 +54,11 @@ def _payloads(depth: int):
     )
 
 
+def _surrogate_escape(match: re.Match) -> str:
+    high, low = divmod(ord(match.group()) - 0x10000, 0x400)
+    return f"\\u{0xD800 + high:04X}\\u{0xDC00 + low:04X}"
+
+
 def _ref_extract(payload: dict, path: str):
     """The reference's mapping rules, transliterated (sql.py:145-166),
     projected into the schemaless engine's string-typed value space."""
@@ -49,7 +71,10 @@ def _ref_extract(payload: dict, path: str):
     if current is None:
         return None
     if isinstance(current, (dict, list)):
-        return json.dumps(current, separators=(",", ":"), ensure_ascii=False)
+        text = json.dumps(current, separators=(",", ":"), ensure_ascii=False)
+        # Spark's JSON writer escapes characters outside the BMP as a
+        # surrogate pair with upper-case hex
+        return re.sub("[\U00010000-\U0010FFFF]", _surrogate_escape, text)
     if isinstance(current, bool):
         return "true" if current else "false"
     return str(current)
@@ -94,18 +119,18 @@ def test_list_form_positional_naming(spark):
     assert (row.param_0, row.param_1, row.param_2) == ("1", "x", None)
 
 
-def test_duplicate_json_keys_first_wins_documented_divergence(spark):
-    """Raw JSON may repeat a key ({"k":1,"k":2}) — something the
-    reference never sees because Python json.loads collapses to the
-    LAST occurrence before mapping (sql.py parses to dict). The
-    JVM-side mapper reads the serialized payload directly and Spark's
-    get_json_object returns the FIRST occurrence — as does DuckDB's
-    json_extract_string, so the oracle hash-compare stays aligned.
-    This test pins that documented divergence: first-wins here,
-    last-wins in the reference."""
+def test_duplicate_json_keys_last_wins_like_reference(spark):
+    """Raw JSON may repeat a key ({"k":1,"k":2}). The reference parses
+    with Python's json.loads, which keeps the LAST occurrence, and the
+    mapper's single from_json parse does the same. Paths below a node
+    that is itself mapped (``k`` and ``k.x``) still go through
+    get_json_object, where the FIRST occurrence wins."""
     df = spark.createDataFrame([('{"k":1,"k":2}',)], ["payload"])
     out = ParametersMapper({"k": "k"}).apply(df).collect()[0]
-    assert out.k == "1"
+    assert out.k == "2"
+    nested = spark.createDataFrame([('{"k":{"x":1},"k":{"x":2}}',)], ["payload"])
+    row = ParametersMapper({"k": "k", "kx": "k.x"}).apply(nested).collect()[0]
+    assert (row.k, row.kx) == ('{"x":2}', "1")
 
 
 def test_list_traversal_yields_null_like_reference(spark):

@@ -5,6 +5,7 @@ SURVEY.md §3.1-3.2; error policy §2C.4)."""
 from __future__ import annotations
 
 import json
+import re
 import sqlite3
 
 import pytest
@@ -87,6 +88,118 @@ def test_pipeline_end_to_end(spark, spool, tmp_path):
     assert len(dead) == 1
     assert dead[0]["dead_reason"] == "undecodable body"
     assert dead[0]["body"] == "not json {"
+
+
+def _json_parses(plan: str) -> dict[str, int]:
+    """JSON expressions in a physical plan, by role. Scan lines are left
+    out: they only repeat the filters pushed into them."""
+    plan = "\n".join(line for line in plan.splitlines() if "FileScan" not in line)
+    line_parses = r"\((?:StructField\([^)]*\), )*value#"
+    envelope_from_json = len(re.findall("from_json" + line_parses, plan))
+    return {
+        "envelope": envelope_from_json + len(re.findall("json_tuple" + line_parses, plan)),
+        "validity": plan.count(", $)"),
+        "payload": plan.count("from_json(") - envelope_from_json,
+        "path": plan.count(", $."),
+    }
+
+
+def test_flow_parses_each_message_once(spark, spool, tmp_path):
+    """The executed plan of a spool -> sql flow parses each message's
+    envelope once, checks the body once and parses the body once more
+    for the mapper. Only a path below a node that is itself mapped
+    (``message.text`` under ``message``) keeps its own get_json_object."""
+    db_path = str(tmp_path / "plan.sqlite")
+    cfg = _config(spool, db_path)
+    cfg["flows"][0][1]["kwargs"]["parameters"] = {
+        "timestamp": "timestamp",
+        "message": "message",
+        "text": "message.text",
+        "missing": "other.unknown",
+        "deeper": "other.nested.x",
+    }
+    cfg["flows"][0][1]["kwargs"]["query"] = (
+        "INSERT INTO logs VALUES (:timestamp, :message, :text, :missing, :deeper)"
+    )
+    con = sqlite3.connect(db_path)
+    con.execute("CREATE TABLE logs (a TEXT, b TEXT, c TEXT, d TEXT, e TEXT)")
+    con.commit()
+    con.close()
+    runners = compile_pipeline(spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt"))
+    (query,) = runners[0].start(available_now=True)
+    query.awaitTermination(120)
+    plan = query._jsq.explainInternal(False)
+    assert _json_parses(plan) == {
+        "envelope": 1, "validity": 1, "payload": 1, "path": 1
+    }, plan
+    con = sqlite3.connect(db_path)
+    rows = sorted(con.execute("SELECT * FROM logs").fetchall())
+    con.close()
+    assert len(rows) == 7
+    assert rows[0] == (
+        "2024-01-01T00:00:00", '{"text":"msg-0"}', "msg-0", None, None
+    )
+
+
+def test_spool_envelope_rows_per_line(spark, tmp_path):
+    """One envelope per spool line, whatever the line holds: a blank,
+    garbage or array line is an all-NULL envelope, and an object body
+    comes back as compact JSON text. The file-source JSON reader would
+    drop the blank line, split the array line into messages and keep
+    the object body's spacing."""
+    from rabbithole_spark.streaming.sources import read_spool_batch
+
+    spool_dir = tmp_path / "envelopes"
+    spool_dir.mkdir()
+    (spool_dir / "lines.jsonl").write_text(
+        "\n".join(
+            [
+                '{"exchange": "logs", "content_type": "application/json", "body": "{}"}',
+                "",
+                "garbage",
+                '[{"exchange": "logs", "body": "1"}, {"exchange": "logs", "body": "2"}]',
+                '{"exchange": "logs", "body": {"a": 1, "b": [1, 2]}}',
+                '{"exchange": "metrics", "content_type": "text/plain", "body": "x"}',
+            ]
+        )
+        + "\n",
+        encoding="utf-8",
+    )
+    good = ("logs", "application/json", "{}")
+    object_body = ("logs", None, '{"a":1,"b":[1,2]}')
+    nulls = (None, None, None)
+    every = read_spool_batch(spark, str(spool_dir)).collect()
+    assert sorted(map(tuple, every), key=repr) == sorted(
+        [good, nulls, nulls, nulls, object_body, ("metrics", "text/plain", "x")],
+        key=repr,
+    )
+    logs = read_spool_batch(spark, str(spool_dir), "logs").collect()
+    assert sorted(map(tuple, logs), key=repr) == sorted([good, object_body], key=repr)
+
+
+def test_null_body_is_a_good_row_with_null_parameters(spark):
+    """The JSON literal ``null`` is a decodable body: it passes the
+    dead-letter split and maps every parameter to NULL."""
+    from rabbithole_spark.plans.mapper import ParametersMapper
+    from rabbithole_spark.streaming.sinks import dead_letter_split, decode_messages
+
+    env = spark.createDataFrame(
+        [
+            ("logs", "application/json", "null"),
+            ("logs", "application/json", '{"k": 1}'),
+            ("logs", "text/plain", "not json {"),
+        ],
+        "exchange string, content_type string, body string",
+    )
+    good, dead = dead_letter_split(decode_messages(env))
+    mapped = ParametersMapper({"k": "k", "kx": "k.x"}).apply(good)
+    assert sorted(map(tuple, mapped.collect()), key=repr) == [
+        ("1", None),
+        (None, None),
+    ]
+    assert [(r.body, r.dead_reason) for r in dead.collect()] == [
+        ("not json {", "undecodable body")
+    ]
 
 
 def test_sql_error_swallowed(spark, spool, tmp_path, caplog):
