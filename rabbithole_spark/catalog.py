@@ -39,7 +39,14 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 #: Query modules whose import populates the registry.
 _QUERY_MODULES = (
-    "rabbithole_spark.queries.llm",
+    "rabbithole_spark.queries.llm.dedup",
+    "rabbithole_spark.queries.llm.similarity",
+    "rabbithole_spark.queries.llm.text",
+    "rabbithole_spark.queries.llm.contamination",
+    "rabbithole_spark.queries.llm.mixture",
+    "rabbithole_spark.queries.llm.pack",
+    "rabbithole_spark.queries.llm.multimodal",
+    "rabbithole_spark.queries.llm.pipelines",
     "rabbithole_spark.queries.tpch",
     "rabbithole_spark.queries.tpch_derived",
     "rabbithole_spark.queries.temporal",

@@ -6,9 +6,3 @@ AQE, and whole-stage codegen apply. Pandas UDFs appear only where the
 built-ins genuinely cannot express the semantics (see similarity.py,
 multimodal.py).
 """
-
-from rabbithole_spark.operators.relational import (  # noqa: F401
-    asof_join,
-    range_join,
-    top_k_per_group,
-)

@@ -178,10 +178,6 @@ class ParametersMapper:
         return df.select(*prefix, *cols)
 
     @property
-    def names(self) -> list[str] | None:
-        return None if self.items is None else [n for n, _ in self.items]
-
-    @property
     def positional(self) -> bool:
         # recorded at construction from the declaration FORM (list vs
         # dict) — inferring it from a name prefix would misclassify a

@@ -2,569 +2,7 @@
 north star): dedup family, similarity search, text analytics,
 multimodal plumbing — exercised on documents/embeddings.
 
-A package since round 11 (was one 6,300-line module): one file per
-family behind the SAME import path — ``rabbithole_spark.queries.llm``
-re-exports every top-level name, so external imports and the registry
-are unchanged.
+One module per query family; ``_common`` holds their shared helpers.
+``rabbithole_spark.catalog`` imports each family module, which registers
+its queries; import names from the module that defines them.
 """
-
-from __future__ import annotations
-
-from rabbithole_spark.queries.llm._common import (
-    _valid_embedding_sql,
-    _dot_sql,
-    _sq_l2_sql,
-    _lloyd_replay_ctes,
-    _QUALITY_CASE_SQL,
-    _SEG_WORDS,
-    _bm25_scores,
-    _bcast_sorted_struct_array,
-    _KMEANS_K,
-    _KMEANS_ITERS,
-    _WINNOW_ORACLE,
-)
-from rabbithole_spark.queries.llm.dedup import (
-    _EXACT_DEDUP_ORACLE,
-    dedup_exact_documents,
-    _FINGERPRINT_ORACLE,
-    dedup_fingerprint,
-    _PREFIX_JACCARD_ORACLE,
-    dedup_jaccard_prefix_filter,
-    _COMPONENTS_ORACLE,
-    dedup_components,
-    _SHINGLES_CTE,
-    _minhash_lsh_oracle,
-    dedup_minhash_lsh,
-    _lsh_verified_pairs,
-    _MINHASH_RECALL_ORACLE,
-    dedup_minhash_recall_audit,
-    _SPAN_K,
-    _dup_spans_oracle,
-    dedup_duplicate_ngram_spans,
-    _span_coverage_oracle,
-    dedup_repeated_span_coverage,
-    _simhash_oracle,
-    dedup_simhash,
-    _CANONICAL_SURVIVORS_ORACLE,
-    dedup_canonical_survivors,
-    _EDJOIN_ORACLE,
-    dedup_edit_distance_prefix,
-    _EDJOIN_SPARSE_ORACLE,
-    dedup_edit_distance_prefix_sparse,
-    _SEMDEDUP_TAU,
-    _SEMDEDUP_FIT_WHERE,
-    _semdedup_oracle,
-    dedup_semantic_semdedup,
-    _INCREMENTAL_DEDUP_ORACLE,
-    dedup_incremental_new_docs,
-    _INGEST_MOD,
-    _INGEST_TAU,
-    _minhash_incremental_oracle,
-    dedup_minhash_incremental,
-)
-from rabbithole_spark.queries.llm.similarity import (
-    _NEAR_DUP_THRESHOLD,
-    _NEAR_DUP_N_PLANES,
-    _near_dup_planes,
-    _plane_sig_sql,
-    _query_vector,
-    _TOPK_ORACLE,
-    similarity_topk_bruteforce,
-    _ann_lsh_oracle,
-    similarity_ann_lsh,
-    _RANGE_TAU,
-    _RANGE_SEARCH_ORACLE,
-    similarity_range_search,
-    _MMR_LAMBDA,
-    _MMR_POOL,
-    _MMR_K,
-    _mmr_oracle,
-    _mmr_pool,
-    similarity_mmr_rerank,
-    _IVF_FIT_BUCKET_SQL,
-    _IVF_VALID_SQL,
-    _IVF_FIT_WHERE,
-    _ivf_corpus,
-    _IVF_N_CENTROIDS,
-    _IVF_NPROBE,
-    _IVF_ITERS,
-    _ivf_cache_path_and_fingerprint,
-    _ann_ivf_oracle,
-    similarity_ann_ivf,
-    _IVF_BATCH_QUERY_IDS,
-    _ann_ivf_batch_oracle,
-    similarity_ann_ivf_batch,
-    _near_dup_oracle,
-    similarity_embedding_near_dup,
-    _CENTROIDS_ORACLE,
-    embedding_centroids,
-    _RRF_K,
-    _RRF_POOL,
-    _RRF_ORACLE,
-    retrieval_hybrid_rrf,
-    _PROJ_IN_DIM,
-    _PROJ_OUT_DIM,
-    _proj_sign,
-    _PROJ_SIGNS,
-    _proj_oracle,
-    embedding_random_projection,
-    _HARDNEG_N_ANCHORS,
-    _HARDNEG_K,
-    _HARDNEG_SHARDS,
-    _HARDNEG_ORACLE,
-    similarity_hard_negatives,
-    _hardneg_two_phase_topk,
-    similarity_hard_negatives_bcast,
-    _VALID_EMB_SQL,
-    _QUANTIZED_ORACLE,
-    similarity_ann_quantized,
-    _KMEANS_FIT_WHERE,
-    _kmeans_oracle,
-    similarity_kmeans_clusters,
-    _FILTERED_LABELS,
-    _FILTERED_TOPK_ORACLE,
-    similarity_filtered_topk,
-)
-from rabbithole_spark.queries.llm.text import (
-    _FLESCH_SQL,
-    _READABILITY_ORACLE,
-    text_readability_scores,
-    _flesch_cols,
-    _TOKENS_ORACLE,
-    text_token_counts,
-    _QUALITY_ORACLE,
-    text_quality_stats,
-    _lang_case_sql,
-    text_lang_id,
-    _CHUNK_ORACLE,
-    text_chunk_documents,
-    _PII_ORACLE,
-    text_pii_scrub,
-    _SEG_DEDUP_ORACLE,
-    text_segment_dedup_rate,
-    _BOILERPLATE_ORACLE,
-    text_remove_boilerplate,
-    _TOP_NGRAMS_ORACLE,
-    text_top_ngrams,
-    _TFIDF_ORACLE,
-    text_tfidf_top_terms,
-    _BM25_ORACLE,
-    text_bm25_ranking,
-    _REPETITION_ORACLE,
-    text_repetition_filter,
-    text_winnow_fingerprints,
-    _PMI_ORACLE,
-    text_collocation_pmi,
-    _LM_XENT_CTES,
-    _LM_XENT_SELECT,
-    _LM_XENT_ORACLE,
-    text_lm_cross_entropy,
-    _lm_xent_per_doc,
-    _QCLF_HEAD,
-    _QCLF_MID,
-    _QCLF_KEEP,
-    _QCLF_SCORE_SQL,
-    _QCLF_ORACLE,
-    text_quality_classifier,
-    _NOVELTY_ORACLE,
-    text_ngram_novelty,
-    _VOCAB_K,
-    _VOCAB_CURVE_TARGETS,
-    _VOCAB_CURVE_ORACLE,
-    text_vocab_coverage_curve,
-    _OOV_ORACLE,
-    text_vocab_oov_rate,
-    _GOPHER_STOPWORDS,
-    _CORPUS_STOPWORDS,
-    _GOPHER_ORACLE,
-    _GOPHER_DOC,
-    text_gopher_rules,
-)
-from rabbithole_spark.queries.llm.contamination import (
-    _SOURCE_OVERLAP_ORACLE,
-    source_overlap_matrix,
-    _SEMCON_N_BENCH,
-    _SEMCON_TOPK,
-    _SEMCON_ORACLE,
-    contamination_semantic_screen,
-    contamination_semantic_screen_bcast,
-    _PII_REDACTION_ORACLE,
-    pii_redaction,
-    _CONTAMINATION_ORACLE,
-    contamination_ngram_overlap,
-    _WINNOW_SPLIT_OFFSET,
-    _WINNOW_SPLIT_BUCKET_SQL,
-    _winnow_split_bucket,
-    _WINNOW_CONTAMINATION_ORACLE,
-    contamination_winnow_overlap,
-)
-from rabbithole_spark.queries.llm.mixture import (
-    _SAMPLE_BUCKET_SQL,
-    _UNIFORM_SAMPLE_ORACLE,
-    sample_uniform_documents,
-    _STRATIFIED_SAMPLE_ORACLE,
-    sample_stratified_by_lang,
-    _KSAMPLE_K,
-    _KSAMPLE_RANK_SQL,
-    _KSAMPLE_ORACLE,
-    sample_fixed_k_per_source,
-    _SPLIT_BUCKET_SQL,
-    _SPLIT_CASE_SQL,
-    _SPLIT_ORACLE,
-    split_train_val_test,
-    _SHUFFLE_SHARDS,
-    _SHARD_HASH_OFFSET,
-    _SHARD_HASH_SQL,
-    _SHARD_SHUFFLE_ORACLE,
-    shard_shuffle_assignment,
-    _MIXTURE_ORACLE,
-    mixture_resample_by_lang,
-    _QSAMPLE_BUCKET_SQL,
-    _QUALITY_SAMPLE_ORACLE,
-    sample_quality_weighted,
-    _SOURCE_QUALITY_ORACLE,
-    source_quality_rollup,
-    _TOKEN_BUDGET_ORACLE,
-    mixture_token_budget,
-    _MIX_ALPHA,
-    _TEMPERATURE_MIX_ORACLE,
-    mixture_temperature_weights,
-    _CURRICULUM_ORACLE,
-    curriculum_phase_stats,
-    _JS_LANGS,
-    _js_sql_terms,
-    _JS_P,
-    _JS_Q,
-    _MIXTURE_JS_ORACLE,
-    mixture_js_divergence_by_source,
-    _DSIR_SPLIT_OFFSET,
-    _DSIR_BUCKETS,
-    _DSIR_SPLIT_SQL,
-    _dsir_oracle,
-    mixture_dsir_importance,
-    _ES_TAG,
-    _ES_K,
-    _ES_W_FLOOR,
-    _ES_M,
-    _ES_ORACLE,
-    _es_oracle,
-    _ES_DOC,
-    sample_weighted_no_replacement,
-)
-from rabbithole_spark.queries.llm.pack import (
-    _PAD_BUCKET,
-    _PAD_EFFICIENCY_ORACLE,
-    pack_padding_efficiency,
-    _SEQ_LEN,
-    _PACK_SHARD_DOCS,
-    _PACK_ORACLE,
-    pack_sequences_by_source,
-    _LENBUCKET_WIDTH,
-    _LENBUCKET_CAP,
-    _LENBATCH_DOCS,
-    _LENBUCKET_SHARD_DOCS,
-    _LENBUCKET_ORACLE,
-    pack_length_buckets,
-)
-from rabbithole_spark.queries.llm.multimodal import (
-    _stringify_features,
-    _BINARY_ORACLE,
-    multimodal_binary_stats,
-    _FEATURE_ORACLE,
-    multimodal_feature_extract,
-    _RESIZE_ORACLE,
-    multimodal_resize_pipeline,
-    _FRAME_ORACLE,
-    multimodal_frame_sample,
-)
-from rabbithole_spark.queries.llm.pipelines import (
-    _CLEAN_ORACLE,
-    pipeline_clean_corpus,
-    _CURATION_ORACLE,
-    pipeline_curation_full,
-    _DIFF_V1_SQL,
-    _DIFF_V2_SQL,
-    _CORPUS_DIFF_ORACLE,
-    corpus_snapshot_diff,
-    _SKEW_DIAG_ORACLE,
-    diagnostic_join_key_skew,
-    _TS_HOURS,
-    _ts_fixed_sum,
-    _TS_OUTLIER_ORACLE,
-    timeseries_user_profile_outliers,
-    _COHORT_ORACLE,
-    cohort_weekly_retention,
-)
-
-
-#: Explicit re-export surface (why every import above exists):
-#: external code imports these through rabbithole_spark.queries.llm.
-__all__ = [
-    "_valid_embedding_sql",
-    "_dot_sql",
-    "_sq_l2_sql",
-    "_lloyd_replay_ctes",
-    "_QUALITY_CASE_SQL",
-    "_SEG_WORDS",
-    "_bm25_scores",
-    "_bcast_sorted_struct_array",
-    "_KMEANS_K",
-    "_KMEANS_ITERS",
-    "_WINNOW_ORACLE",
-    "_EXACT_DEDUP_ORACLE",
-    "dedup_exact_documents",
-    "_FINGERPRINT_ORACLE",
-    "dedup_fingerprint",
-    "_PREFIX_JACCARD_ORACLE",
-    "dedup_jaccard_prefix_filter",
-    "_COMPONENTS_ORACLE",
-    "dedup_components",
-    "_SHINGLES_CTE",
-    "_minhash_lsh_oracle",
-    "dedup_minhash_lsh",
-    "_lsh_verified_pairs",
-    "_MINHASH_RECALL_ORACLE",
-    "dedup_minhash_recall_audit",
-    "_SPAN_K",
-    "_dup_spans_oracle",
-    "dedup_duplicate_ngram_spans",
-    "_span_coverage_oracle",
-    "dedup_repeated_span_coverage",
-    "_simhash_oracle",
-    "dedup_simhash",
-    "_CANONICAL_SURVIVORS_ORACLE",
-    "dedup_canonical_survivors",
-    "_EDJOIN_ORACLE",
-    "dedup_edit_distance_prefix",
-    "_EDJOIN_SPARSE_ORACLE",
-    "dedup_edit_distance_prefix_sparse",
-    "_SEMDEDUP_TAU",
-    "_SEMDEDUP_FIT_WHERE",
-    "_semdedup_oracle",
-    "dedup_semantic_semdedup",
-    "_INCREMENTAL_DEDUP_ORACLE",
-    "dedup_incremental_new_docs",
-    "_INGEST_MOD",
-    "_INGEST_TAU",
-    "_minhash_incremental_oracle",
-    "dedup_minhash_incremental",
-    "_NEAR_DUP_THRESHOLD",
-    "_NEAR_DUP_N_PLANES",
-    "_near_dup_planes",
-    "_plane_sig_sql",
-    "_query_vector",
-    "_TOPK_ORACLE",
-    "similarity_topk_bruteforce",
-    "_ann_lsh_oracle",
-    "similarity_ann_lsh",
-    "_RANGE_TAU",
-    "_RANGE_SEARCH_ORACLE",
-    "similarity_range_search",
-    "_MMR_LAMBDA",
-    "_MMR_POOL",
-    "_MMR_K",
-    "_mmr_oracle",
-    "_mmr_pool",
-    "similarity_mmr_rerank",
-    "_IVF_FIT_BUCKET_SQL",
-    "_IVF_VALID_SQL",
-    "_IVF_FIT_WHERE",
-    "_ivf_corpus",
-    "_IVF_N_CENTROIDS",
-    "_IVF_NPROBE",
-    "_IVF_ITERS",
-    "_ivf_cache_path_and_fingerprint",
-    "_ann_ivf_oracle",
-    "similarity_ann_ivf",
-    "_IVF_BATCH_QUERY_IDS",
-    "_ann_ivf_batch_oracle",
-    "similarity_ann_ivf_batch",
-    "_near_dup_oracle",
-    "similarity_embedding_near_dup",
-    "_CENTROIDS_ORACLE",
-    "embedding_centroids",
-    "_RRF_K",
-    "_RRF_POOL",
-    "_RRF_ORACLE",
-    "retrieval_hybrid_rrf",
-    "_PROJ_IN_DIM",
-    "_PROJ_OUT_DIM",
-    "_proj_sign",
-    "_PROJ_SIGNS",
-    "_proj_oracle",
-    "embedding_random_projection",
-    "_HARDNEG_N_ANCHORS",
-    "_HARDNEG_K",
-    "_HARDNEG_SHARDS",
-    "_HARDNEG_ORACLE",
-    "similarity_hard_negatives",
-    "_hardneg_two_phase_topk",
-    "similarity_hard_negatives_bcast",
-    "_VALID_EMB_SQL",
-    "_QUANTIZED_ORACLE",
-    "similarity_ann_quantized",
-    "_KMEANS_FIT_WHERE",
-    "_kmeans_oracle",
-    "similarity_kmeans_clusters",
-    "_FILTERED_LABELS",
-    "_FILTERED_TOPK_ORACLE",
-    "similarity_filtered_topk",
-    "_FLESCH_SQL",
-    "_READABILITY_ORACLE",
-    "text_readability_scores",
-    "_flesch_cols",
-    "_TOKENS_ORACLE",
-    "text_token_counts",
-    "_QUALITY_ORACLE",
-    "text_quality_stats",
-    "_lang_case_sql",
-    "text_lang_id",
-    "_CHUNK_ORACLE",
-    "text_chunk_documents",
-    "_PII_ORACLE",
-    "text_pii_scrub",
-    "_SEG_DEDUP_ORACLE",
-    "text_segment_dedup_rate",
-    "_BOILERPLATE_ORACLE",
-    "text_remove_boilerplate",
-    "_TOP_NGRAMS_ORACLE",
-    "text_top_ngrams",
-    "_TFIDF_ORACLE",
-    "text_tfidf_top_terms",
-    "_BM25_ORACLE",
-    "text_bm25_ranking",
-    "_REPETITION_ORACLE",
-    "text_repetition_filter",
-    "text_winnow_fingerprints",
-    "_PMI_ORACLE",
-    "text_collocation_pmi",
-    "_LM_XENT_CTES",
-    "_LM_XENT_SELECT",
-    "_LM_XENT_ORACLE",
-    "text_lm_cross_entropy",
-    "_lm_xent_per_doc",
-    "_QCLF_HEAD",
-    "_QCLF_MID",
-    "_QCLF_KEEP",
-    "_QCLF_SCORE_SQL",
-    "_QCLF_ORACLE",
-    "text_quality_classifier",
-    "_NOVELTY_ORACLE",
-    "text_ngram_novelty",
-    "_VOCAB_K",
-    "_VOCAB_CURVE_TARGETS",
-    "_VOCAB_CURVE_ORACLE",
-    "text_vocab_coverage_curve",
-    "_OOV_ORACLE",
-    "text_vocab_oov_rate",
-    "_GOPHER_STOPWORDS",
-    "_CORPUS_STOPWORDS",
-    "_GOPHER_ORACLE",
-    "_GOPHER_DOC",
-    "text_gopher_rules",
-    "_SOURCE_OVERLAP_ORACLE",
-    "source_overlap_matrix",
-    "_SEMCON_N_BENCH",
-    "_SEMCON_TOPK",
-    "_SEMCON_ORACLE",
-    "contamination_semantic_screen",
-    "contamination_semantic_screen_bcast",
-    "_PII_REDACTION_ORACLE",
-    "pii_redaction",
-    "_CONTAMINATION_ORACLE",
-    "contamination_ngram_overlap",
-    "_WINNOW_SPLIT_OFFSET",
-    "_WINNOW_SPLIT_BUCKET_SQL",
-    "_winnow_split_bucket",
-    "_WINNOW_CONTAMINATION_ORACLE",
-    "contamination_winnow_overlap",
-    "_SAMPLE_BUCKET_SQL",
-    "_UNIFORM_SAMPLE_ORACLE",
-    "sample_uniform_documents",
-    "_STRATIFIED_SAMPLE_ORACLE",
-    "sample_stratified_by_lang",
-    "_KSAMPLE_K",
-    "_KSAMPLE_RANK_SQL",
-    "_KSAMPLE_ORACLE",
-    "sample_fixed_k_per_source",
-    "_SPLIT_BUCKET_SQL",
-    "_SPLIT_CASE_SQL",
-    "_SPLIT_ORACLE",
-    "split_train_val_test",
-    "_SHUFFLE_SHARDS",
-    "_SHARD_HASH_OFFSET",
-    "_SHARD_HASH_SQL",
-    "_SHARD_SHUFFLE_ORACLE",
-    "shard_shuffle_assignment",
-    "_MIXTURE_ORACLE",
-    "mixture_resample_by_lang",
-    "_QSAMPLE_BUCKET_SQL",
-    "_QUALITY_SAMPLE_ORACLE",
-    "sample_quality_weighted",
-    "_SOURCE_QUALITY_ORACLE",
-    "source_quality_rollup",
-    "_TOKEN_BUDGET_ORACLE",
-    "mixture_token_budget",
-    "_MIX_ALPHA",
-    "_TEMPERATURE_MIX_ORACLE",
-    "mixture_temperature_weights",
-    "_CURRICULUM_ORACLE",
-    "curriculum_phase_stats",
-    "_JS_LANGS",
-    "_js_sql_terms",
-    "_JS_P",
-    "_JS_Q",
-    "_MIXTURE_JS_ORACLE",
-    "mixture_js_divergence_by_source",
-    "_DSIR_SPLIT_OFFSET",
-    "_DSIR_BUCKETS",
-    "_DSIR_SPLIT_SQL",
-    "_dsir_oracle",
-    "mixture_dsir_importance",
-    "_ES_TAG",
-    "_ES_K",
-    "_ES_W_FLOOR",
-    "_ES_M",
-    "_ES_ORACLE",
-    "_es_oracle",
-    "_ES_DOC",
-    "sample_weighted_no_replacement",
-    "_PAD_BUCKET",
-    "_PAD_EFFICIENCY_ORACLE",
-    "pack_padding_efficiency",
-    "_SEQ_LEN",
-    "_PACK_SHARD_DOCS",
-    "_PACK_ORACLE",
-    "pack_sequences_by_source",
-    "_LENBUCKET_WIDTH",
-    "_LENBUCKET_CAP",
-    "_LENBATCH_DOCS",
-    "_LENBUCKET_SHARD_DOCS",
-    "_LENBUCKET_ORACLE",
-    "pack_length_buckets",
-    "_stringify_features",
-    "_BINARY_ORACLE",
-    "multimodal_binary_stats",
-    "_FEATURE_ORACLE",
-    "multimodal_feature_extract",
-    "_RESIZE_ORACLE",
-    "multimodal_resize_pipeline",
-    "_FRAME_ORACLE",
-    "multimodal_frame_sample",
-    "_CLEAN_ORACLE",
-    "pipeline_clean_corpus",
-    "_CURATION_ORACLE",
-    "pipeline_curation_full",
-    "_DIFF_V1_SQL",
-    "_DIFF_V2_SQL",
-    "_CORPUS_DIFF_ORACLE",
-    "corpus_snapshot_diff",
-    "_SKEW_DIAG_ORACLE",
-    "diagnostic_join_key_skew",
-    "_TS_HOURS",
-    "_ts_fixed_sum",
-    "_TS_OUTLIER_ORACLE",
-    "timeseries_user_profile_outliers",
-    "_COHORT_ORACLE",
-    "cohort_weekly_retention",
-]

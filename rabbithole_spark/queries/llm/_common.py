@@ -1,8 +1,4 @@
-"""Shared helpers/constants for the LLM-pipeline query families.
-
-Split out of queries/llm.py (round 11) purely for maintainability —
-same registrations, same expressions; reference citations unchanged.
-"""
+"""Shared helpers/constants for the LLM-pipeline query families."""
 
 from __future__ import annotations
 

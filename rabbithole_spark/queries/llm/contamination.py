@@ -1,8 +1,4 @@
-"""Benchmark-contamination screens and PII redaction.
-
-Split out of queries/llm.py (round 11) purely for maintainability —
-same registrations, same expressions; reference citations unchanged.
-"""
+"""Benchmark-contamination screens and PII redaction."""
 
 from __future__ import annotations
 

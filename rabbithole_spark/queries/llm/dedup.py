@@ -1,8 +1,5 @@
 """Deduplication queries: exact/fingerprint, MinHash-LSH, SimHash,
 span-level (Lee'22), similarity joins, connected components, incremental.
-
-Split out of queries/llm.py (round 11) purely for maintainability —
-same registrations, same expressions; reference citations unchanged.
 """
 
 from __future__ import annotations

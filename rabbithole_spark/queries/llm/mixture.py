@@ -1,8 +1,4 @@
-"""Sampling, split, mixture-weighting, curriculum and DSIR queries.
-
-Split out of queries/llm.py (round 11) purely for maintainability —
-same registrations, same expressions; reference citations unchanged.
-"""
+"""Sampling, split, mixture-weighting, curriculum and DSIR queries."""
 
 from __future__ import annotations
 

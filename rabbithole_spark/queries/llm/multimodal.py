@@ -1,8 +1,4 @@
-"""Multimodal binary-column queries (decode/resize/frame plumbing).
-
-Split out of queries/llm.py (round 11) purely for maintainability —
-same registrations, same expressions; reference citations unchanged.
-"""
+"""Multimodal binary-column queries (decode/resize/frame plumbing)."""
 
 from __future__ import annotations
 

@@ -1,8 +1,4 @@
-"""Sequence-packing queries (fixed windows, length buckets).
-
-Split out of queries/llm.py (round 11) purely for maintainability —
-same registrations, same expressions; reference citations unchanged.
-"""
+"""Sequence-packing queries (fixed windows, length buckets)."""
 
 from __future__ import annotations
 

@@ -1,8 +1,4 @@
-"""Composed curation pipelines and corpus diagnostics.
-
-Split out of queries/llm.py (round 11) purely for maintainability —
-same registrations, same expressions; reference citations unchanged.
-"""
+"""Composed curation pipelines and corpus diagnostics."""
 
 from __future__ import annotations
 

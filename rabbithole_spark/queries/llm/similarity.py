@@ -1,8 +1,5 @@
 """Similarity search & embedding queries: brute-force/filtered/range
 top-k, LSH/IVF/quantized ANN, k-means, MMR, projections, hard negatives.
-
-Split out of queries/llm.py (round 11) purely for maintainability —
-same registrations, same expressions; reference citations unchanged.
 """
 
 from __future__ import annotations

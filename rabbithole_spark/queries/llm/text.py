@@ -1,8 +1,5 @@
 """Text analysis queries: quality (Gopher/C4/CCNet), readability,
 lang-ID, tokens/n-grams, TF-IDF/BM25/PMI, LM cross-entropy, fingerprints.
-
-Split out of queries/llm.py (round 11) purely for maintainability —
-same registrations, same expressions; reference citations unchanged.
 """
 
 from __future__ import annotations

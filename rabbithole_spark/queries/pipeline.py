@@ -380,13 +380,13 @@ def _run_count_or_time_batcher(spark: SparkSession, sf_dir: str) -> DataFrame:
     must hit both queries or neither."""
     from rabbithole_spark.streaming.stateful import (
         await_state_drained,
-        count_or_time_batcher_v1,
+        count_or_time_batcher,
     )
 
     stream = _read_events_stream(spark, sf_dir).select(
         "event_type", "event_id", "user_id"
     )
-    batched = count_or_time_batcher_v1(
+    batched = count_or_time_batcher(
         stream.groupBy("event_type"),
         "event_type string, event_id long, user_id long",
         size_limit=10,
@@ -512,6 +512,27 @@ def join_attribution_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _click_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The streamed click-to-purchase interval join behind every
+    stream_stream_* query: same-user purchase within 1h of the click,
+    a 2h watermark on each side, and ``how`` as the batch join type."""
+    ev = _read_events_stream(spark, sf_dir)
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        F.col("user_id").alias("c_user_id"), F.col("ts").alias("click_ts")
+    ).withWatermark("click_ts", "2 hours")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("p_user_id"),
+        F.col("ts").alias("purchase_ts"),
+        F.col("value").alias("purchase_value"),
+    ).withWatermark("purchase_ts", "2 hours")
+    cond = (
+        (F.col("c_user_id") == F.col("p_user_id"))
+        & (F.col("purchase_ts") >= F.col("click_ts"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR"))
+    )
+    return clicks.join(purchases, cond, how)
+
+
 @register(
     "stream_stream_interval_join",
     oracle=_ATTRIBUTION_ORACLE,
@@ -525,30 +546,9 @@ def join_attribution_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle checks the STREAMED output directly.",
 )
 def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read_events_stream(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .withColumnRenamed("ts", "click_ts")
-        .withWatermark("click_ts", "2 hours")
-        .alias("c")
+    joined = _click_purchase_join(spark, sf_dir, "inner").select(
+        F.col("c_user_id").alias("user_id"), "click_ts", "purchase_ts", "purchase_value"
     )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .withColumnRenamed("ts", "purchase_ts")
-        .withColumnRenamed("user_id", "p_user_id")
-        .withColumnRenamed("value", "purchase_value")
-        .withWatermark("purchase_ts", "2 hours")
-        .alias("p")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c.user_id") == F.col("p.p_user_id"))
-        & (F.col("p.purchase_ts") >= F.col("c.click_ts"))
-        & (
-            F.col("p.purchase_ts")
-            <= F.col("c.click_ts") + F.expr("INTERVAL 1 HOUR")
-        ),
-    ).select("user_id", "click_ts", "purchase_ts", "purchase_value")
     return _memory_sinktable(spark, joined, "stream_ssjoin", "append", sf_dir=sf_dir)
 
 
@@ -612,31 +612,9 @@ SELECT * FROM matched UNION ALL SELECT * FROM unmatched
     "outer semantics, tail caveat included, are hash-checked.",
 )
 def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read_events_stream(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .withColumnRenamed("ts", "click_ts")
-        .withWatermark("click_ts", "2 hours")
-        .alias("c")
+    joined = _click_purchase_join(spark, sf_dir, "left_outer").select(
+        F.col("c_user_id").alias("user_id"), "click_ts", "purchase_ts", "purchase_value"
     )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .withColumnRenamed("ts", "purchase_ts")
-        .withColumnRenamed("user_id", "p_user_id")
-        .withColumnRenamed("value", "purchase_value")
-        .withWatermark("purchase_ts", "2 hours")
-        .alias("p")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c.user_id") == F.col("p.p_user_id"))
-        & (F.col("p.purchase_ts") >= F.col("c.click_ts"))
-        & (
-            F.col("p.purchase_ts")
-            <= F.col("c.click_ts") + F.expr("INTERVAL 1 HOUR")
-        ),
-        "left_outer",
-    ).select("user_id", "click_ts", "purchase_ts", "purchase_value")
     return _memory_sinktable(spark, joined, "stream_ssouter", "append", sf_dir=sf_dir)
 
 
@@ -669,30 +647,9 @@ WHERE c.event_type = 'click'
     "the inner join's state.",
 )
 def stream_stream_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read_events_stream(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .withColumnRenamed("ts", "click_ts")
-        .withWatermark("click_ts", "2 hours")
-        .alias("c")
+    joined = _click_purchase_join(spark, sf_dir, "left_semi").select(
+        F.col("c_user_id").alias("user_id"), "click_ts"
     )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .withColumnRenamed("ts", "purchase_ts")
-        .withColumnRenamed("user_id", "p_user_id")
-        .withWatermark("purchase_ts", "2 hours")
-        .alias("p")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c.user_id") == F.col("p.p_user_id"))
-        & (F.col("p.purchase_ts") >= F.col("c.click_ts"))
-        & (
-            F.col("p.purchase_ts")
-            <= F.col("c.click_ts") + F.expr("INTERVAL 1 HOUR")
-        ),
-        "left_semi",
-    ).select("user_id", "click_ts")
     return _memory_sinktable(spark, joined, "stream_sssemi", "append", sf_dir=sf_dir)
 
 
@@ -772,37 +729,12 @@ UNION ALL SELECT * FROM unmatched_purchases
     "state.",
 )
 def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read_events_stream(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .withColumnRenamed("ts", "click_ts")
-        .withColumnRenamed("user_id", "c_user_id")
-        .withWatermark("click_ts", "2 hours")
-        .alias("c")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .withColumnRenamed("ts", "purchase_ts")
-        .withColumnRenamed("user_id", "p_user_id")
-        .withColumnRenamed("value", "purchase_value")
-        .withWatermark("purchase_ts", "2 hours")
-        .alias("p")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c.c_user_id") == F.col("p.p_user_id"))
-        & (F.col("p.purchase_ts") >= F.col("c.click_ts"))
-        & (
-            F.col("p.purchase_ts")
-            <= F.col("c.click_ts") + F.expr("INTERVAL 1 HOUR")
-        ),
-        "full_outer",
-    ).select(
-        F.col("c.c_user_id").alias("click_user_id"),
-        F.col("c.click_ts").alias("click_ts"),
-        F.col("p.p_user_id").alias("purchase_user_id"),
-        F.col("p.purchase_ts").alias("purchase_ts"),
-        F.col("p.purchase_value").alias("purchase_value"),
+    joined = _click_purchase_join(spark, sf_dir, "full_outer").select(
+        F.col("c_user_id").alias("click_user_id"),
+        "click_ts",
+        F.col("p_user_id").alias("purchase_user_id"),
+        "purchase_ts",
+        "purchase_value",
     )
     return _memory_sinktable(spark, joined, "stream_ssfull", "append", sf_dir=sf_dir)
 
@@ -855,37 +787,12 @@ SELECT * FROM matched UNION ALL SELECT * FROM unmatched_purchases
     "are hash-checked.",
 )
 def stream_stream_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read_events_stream(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .withColumnRenamed("ts", "click_ts")
-        .withColumnRenamed("user_id", "c_user_id")
-        .withWatermark("click_ts", "2 hours")
-        .alias("c")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .withColumnRenamed("ts", "purchase_ts")
-        .withColumnRenamed("user_id", "p_user_id")
-        .withColumnRenamed("value", "purchase_value")
-        .withWatermark("purchase_ts", "2 hours")
-        .alias("p")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c.c_user_id") == F.col("p.p_user_id"))
-        & (F.col("p.purchase_ts") >= F.col("c.click_ts"))
-        & (
-            F.col("p.purchase_ts")
-            <= F.col("c.click_ts") + F.expr("INTERVAL 1 HOUR")
-        ),
-        "right_outer",
-    ).select(
-        F.col("c.c_user_id").alias("click_user_id"),
-        F.col("c.click_ts").alias("click_ts"),
-        F.col("p.p_user_id").alias("purchase_user_id"),
-        F.col("p.purchase_ts").alias("purchase_ts"),
-        F.col("p.purchase_value").alias("purchase_value"),
+    joined = _click_purchase_join(spark, sf_dir, "right_outer").select(
+        F.col("c_user_id").alias("click_user_id"),
+        "click_ts",
+        F.col("p_user_id").alias("purchase_user_id"),
+        "purchase_ts",
+        "purchase_value",
     )
     return _memory_sinktable(spark, joined, "stream_ssright", "append", sf_dir=sf_dir)
 

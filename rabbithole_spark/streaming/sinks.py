@@ -1,10 +1,12 @@
 """Sinks + message decode with the reference's error policy.
 
-- decode_messages: content-type check + JSON validation; malformed
-  deliveries are *marked*, not crashed on (amqp.py:101-109 parity —
-  nack-without-requeue becomes a dead-letter split). The validity check
-  is the only parse before the mapper's: good rows pass the body on
-  as ``payload`` unchanged.
+- decode_messages: JSON validation; malformed deliveries are *marked*,
+  not crashed on (amqp.py:101-109 parity — nack-without-requeue becomes
+  a dead-letter split). Only a parse failure kills a row; the content
+  type rides along to the dead-letter rows, and the reference's
+  content-type warning (amqp.py:101-103) is not reproduced. The
+  validity check is the only parse before the mapper's: good rows pass
+  the body on as ``payload`` unchanged.
 - sql_sink: parameterized-SQL foreachBatch sink; SQL errors are logged
   and the batch dropped, the stream continues (sql.py:99-105 parity,
   at-most-once per batch — documented).
@@ -24,9 +26,6 @@ from rabbithole_spark.streaming.batcher import BatchPolicy
 
 LOGGER = logging.getLogger(__name__)
 
-JSON_CONTENT_TYPE = "application/json"
-
-
 def _is_valid_json(body: Column) -> Column:
     # get_json_object('$') is NULL exactly when the body does not parse.
     # The JSON literal `null` parses (to the text "null"), so a `null`
@@ -35,19 +34,16 @@ def _is_valid_json(body: Column) -> Column:
 
 
 def decode_messages(df: DataFrame) -> DataFrame:
-    """Add ``dead_reason`` (NULL when the body is JSON) and
-    ``content_type_ok``.
+    """Add ``dead_reason`` (NULL when the body is JSON).
 
-    Bad rows keep the raw body for the dead-letter sink. Content-type
-    mismatch only *warns* in the reference (amqp.py:101-103) — it still
-    tries to parse; we mirror that: only parse failure kills a row.
+    Bad rows keep the raw body and its content type for the dead-letter
+    sink. Only a parse failure kills a row: the reference still parses
+    on a content-type mismatch, and its warning for one
+    (amqp.py:101-103) is not reproduced.
     """
     return df.withColumn(
         "dead_reason",
         F.when(~_is_valid_json(F.col("body")), F.lit("undecodable body")),
-    ).withColumn(
-        "content_type_ok",
-        F.coalesce(F.col("content_type") == JSON_CONTENT_TYPE, F.lit(False)),
     )
 
 

@@ -6,8 +6,12 @@ Reference parity map (SURVEY.md §2A):
 
 - A1 AMQP source/scan      -> AmqpDataSource / read_spool_stream
 - A2 exchange bind         -> ``exchange`` filter (demux on one stream)
-- A3 JSON decode+validate  -> sinks.decode_messages (content-type check,
-                              parse, dead-letter instead of nack)
+- A3 JSON decode+validate  -> sinks.decode_messages (only a parse failure
+                              kills a row: dead-letter instead of nack;
+                              the content type rides along to the
+                              dead-letter rows; the reference's
+                              content-type warning, amqp.py:101-103, is
+                              not reproduced)
 - A4 route by exchange     -> ``df.filter(col("exchange") == name)``
 
 Message envelope (what the broker/spool delivers):

@@ -24,7 +24,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 __all__ = [
     "running_totals_with_state",
-    "count_or_time_batcher_v1",
+    "count_or_time_batcher",
     "await_state_drained",
 ]
 
@@ -127,7 +127,7 @@ def running_totals_with_state(grouped_stream: DataFrame) -> DataFrame:
     )
 
 
-def count_or_time_batcher_v1(
+def count_or_time_batcher(
     grouped_stream,
     row_schema: str,
     size_limit: int = 5,

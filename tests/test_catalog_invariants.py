@@ -113,3 +113,19 @@ def test_missing_query_module_fails_loudly(monkeypatch):
     )
     with pytest.raises(ModuleNotFoundError):
         catalog.load_all()
+
+
+def test_every_registering_module_is_listed():
+    """load_all() imports only the modules named in _QUERY_MODULES, so a
+    query module missing from that list would register nothing."""
+    pkg = os.path.join(REPO, "rabbithole_spark", "queries")
+    unlisted = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            if "@register(" not in f.read():
+                continue
+        rel = os.path.relpath(path, REPO)[: -len(".py")]
+        mod = rel.replace(os.sep, ".").removesuffix(".__init__")
+        if mod not in catalog._QUERY_MODULES:
+            unlisted.append(mod)
+    assert unlisted == [], f"query modules missing from _QUERY_MODULES: {unlisted}"

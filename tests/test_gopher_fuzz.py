@@ -29,7 +29,7 @@ import re
 
 import pytest
 
-from rabbithole_spark.queries.llm import _CORPUS_STOPWORDS, text_gopher_rules
+from rabbithole_spark.queries.llm.text import _CORPUS_STOPWORDS, text_gopher_rules
 
 _WS = " \t\n\r\f"
 

@@ -685,7 +685,7 @@ def test_mmr_rerank_invariants(spark):
     import math
 
     from rabbithole_spark.catalog import load_all
-    from rabbithole_spark.queries.llm import _mmr_pool
+    from rabbithole_spark.queries.llm.similarity import _mmr_pool
 
     sf = "/root/testdata/sf0.001"
     rows = load_all()["similarity_mmr_rerank"].fn(spark, sf).collect()
@@ -796,7 +796,7 @@ def test_random_projection_matches_numpy(spark):
     matrix itself is balanced enough to be a real JL matrix."""
     import numpy as np
 
-    from rabbithole_spark.queries.llm import _PROJ_SIGNS
+    from rabbithole_spark.queries.llm.similarity import _PROJ_SIGNS
 
     sf = "/root/testdata/sf0.001"
     got = {
@@ -825,7 +825,7 @@ def test_hard_negatives_two_phase_equals_single_window(spark):
     from pyspark.sql import Window
 
     from rabbithole_spark.operators.similarity import cosine, valid_embeddings
-    from rabbithole_spark.queries.llm import (
+    from rabbithole_spark.queries.llm.similarity import (
         _HARDNEG_K,
         _HARDNEG_N_ANCHORS,
     )
@@ -876,7 +876,7 @@ def test_length_bucket_batches_bound_padding(spark):
     (n_docs, max_tokens, total_tokens), and within a bucket the token
     spread is bounded by the bucket width (except the capped top
     bucket, which is open-ended by design)."""
-    from rabbithole_spark.queries.llm import (
+    from rabbithole_spark.queries.llm.pack import (
         _LENBATCH_DOCS,
         _LENBUCKET_CAP,
         _LENBUCKET_WIDTH,
@@ -910,7 +910,7 @@ def test_semantic_screen_argmax_matches_per_pair_replay(spark):
     the benchmark set and nearest_bench the tie-broken argmax (sim
     desc, bench_id desc). Benchmark rows themselves never appear."""
     from rabbithole_spark.operators.similarity import cosine, valid_embeddings
-    from rabbithole_spark.queries.llm import _SEMCON_N_BENCH
+    from rabbithole_spark.queries.llm.contamination import _SEMCON_N_BENCH
 
     sf = "/root/testdata/sf0.001"
     got = load_all()["contamination_semantic_screen"].fn(spark, sf).collect()
@@ -1062,7 +1062,7 @@ def test_quality_classifier_composes_feature_operators(spark):
     keep must reproduce the registered classifier rows exactly — so a
     drift in any feature operator (or in the classifier's private
     copies of their expressions) fails here, not just at the oracle."""
-    from rabbithole_spark.queries.llm import (
+    from rabbithole_spark.queries.llm.text import (
         _QCLF_HEAD,
         _QCLF_KEEP,
         _QCLF_MID,
@@ -1187,10 +1187,10 @@ def test_bucket_hash_independence(spark):
     buckets (decontamination split, training shuffle) now use
     domain-tagged xxhash64; this pins all three pairwise mod-4
     agreements near the independent 0.25 on a deterministic id range."""
-    from rabbithole_spark.queries.llm import (
+    from rabbithole_spark.queries.llm.contamination import _WINNOW_SPLIT_OFFSET
+    from rabbithole_spark.queries.llm.mixture import (
         _QSAMPLE_BUCKET_SQL,
         _SHARD_HASH_OFFSET,
-        _WINNOW_SPLIT_OFFSET,
     )
 
     d = spark.range(20000).withColumnRenamed("id", "doc_id")
@@ -1225,7 +1225,7 @@ def test_dsir_importance_replays_and_selects_target_like_docs(spark, tmp_path):
     import math
     from decimal import Decimal, ROUND_HALF_UP
 
-    from rabbithole_spark.queries.llm import (
+    from rabbithole_spark.queries.llm.mixture import (
         _DSIR_BUCKETS,
         _DSIR_SPLIT_OFFSET,
     )
@@ -1334,7 +1334,7 @@ def test_gopher_rules_planted_fixture_flips_every_rule(spark, tmp_path):
     query, so the differential lives here until round 10)."""
     import duckdb
 
-    from rabbithole_spark.queries.llm import (
+    from rabbithole_spark.queries.llm.text import (
         _GOPHER_ORACLE,
         text_gopher_rules,
     )
@@ -1383,7 +1383,7 @@ def test_gopher_rules_planted_fixture_flips_every_rule(spark, tmp_path):
     assert out[11].r_ellipsis_lines is False and out[11].n_lines == 10
     # the paper's English list is a real parameter: under it the
     # corpus-function-word docs fail the stop-word rule (only 'the')
-    from rabbithole_spark.queries.llm import _GOPHER_STOPWORDS
+    from rabbithole_spark.queries.llm.text import _GOPHER_STOPWORDS
 
     paper = {
         r.doc_id: r.r_stopwords
@@ -1423,7 +1423,7 @@ def test_es_weighted_sample_replays_and_skews_to_weight(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from rabbithole_spark.queries.llm import (
+    from rabbithole_spark.queries.llm.mixture import (
         _ES_K,
         _ES_M,
         _ES_TAG,

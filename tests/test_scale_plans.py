@@ -389,7 +389,7 @@ def test_pack_sequences_shard_key_bounds_window_partitions(spark):
     sources, every shard holds at most _PACK_SHARD_DOCS docs, and the
     physical window spec partitions on both keys."""
     from rabbithole_spark.catalog import load_all
-    from rabbithole_spark.queries.llm import _PACK_SHARD_DOCS
+    from rabbithole_spark.queries.llm.pack import _PACK_SHARD_DOCS
 
     df = load_all()["pack_sequences_by_source"].fn(spark, SF)
     shards = (
@@ -520,7 +520,7 @@ def test_mmr_pool_plan_is_shuffle_free(spark):
     exact-cosine top-pool must stay scan + TakeOrderedAndProject with
     zero non-broadcast Exchanges (a global sort or repartition
     sneaking in would regress the 100 TB path unseen)."""
-    from rabbithole_spark.queries.llm import _mmr_pool
+    from rabbithole_spark.queries.llm.similarity import _mmr_pool
 
     plan = (
         _mmr_pool(spark, SF)._jdf.queryExecution().executedPlan().toString()

@@ -113,7 +113,7 @@ def test_count_flush_batcher_exact_size_batches(spark, tmp_path):
     """State-v1 batcher: every size-flush emits exactly ``size_limit``
     rows; each key's sub-size leftover time-flushes, so every input
     row exits exactly once with the right reason."""
-    from rabbithole_spark.streaming.stateful import count_or_time_batcher_v1
+    from rabbithole_spark.streaming.stateful import count_or_time_batcher
 
     src = str(tmp_path / "batcher_src")
     ev = table(spark, SF, "events").select("event_type", "event_id")
@@ -126,7 +126,7 @@ def test_count_flush_batcher_exact_size_batches(spark, tmp_path):
     size = 10
     out = _run_batcher(
         spark,
-        count_or_time_batcher_v1,
+        count_or_time_batcher,
         src,
         f"batcher_{uuid.uuid4().hex[:8]}",
         size_limit=size,
@@ -149,7 +149,7 @@ def test_time_flush_emits_partial_batch(spark, tmp_path):
     processing-time timer can flush — rows must arrive tagged 'time'."""
     import time
 
-    from rabbithole_spark.streaming.stateful import count_or_time_batcher_v1
+    from rabbithole_spark.streaming.stateful import count_or_time_batcher
 
     src = str(tmp_path / "timeflush_src")
     spark.createDataFrame(
@@ -165,7 +165,7 @@ def test_time_flush_emits_partial_batch(spark, tmp_path):
             .load(src)
         )
         q = (
-            count_or_time_batcher_v1(
+            count_or_time_batcher(
                 stream.groupBy("k"),
                 "k string, v long",
                 size_limit=100,
