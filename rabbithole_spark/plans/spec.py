@@ -5,8 +5,17 @@ top-level ``size_limit``/``time_limit``, ``blocks`` (named typed
 endpoints), ``flows`` ([input-ref, output-ref] pairs). The same YAML
 shape compiles here to one StreamingQuery per flow:
 
-    readStream (block) -> exchange demux -> decode -> dead-letter split
-      -> ParametersMapper select -> foreachBatch sink, trigger(policy)
+    readStream (block) -> exchange demux -> decode
+      -> payload + _dead_letter projection -> ParametersMapper select
+         (keeps _dead_letter) -> foreachBatch sql sink, trigger(policy)
+           per task: good rows -> sqlite; dead rows -> one parquet
+           file per (batch, partition) under <dead_letter_dir>/<flow>
+
+The dead rows leave from the sink task that already parsed them, so
+one source read, one parse and one offset log serve both sides. The
+jdbc, parquet, memory and spool outputs keep the two-stream shape:
+a dead-letter split, with the dead side as a second streaming
+parquet query (``<flow>_dead``) when a dead-letter dir is given.
 
 Unlike the reference (side effects while instantiating blocks,
 cli.py:97-106), compilation is fully lazy — nothing connects until
@@ -28,6 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from rabbithole_spark.plans.mapper import ParametersMapper
 from rabbithole_spark.streaming.batcher import BatchPolicy
 from rabbithole_spark.streaming.sinks import (
+    DEAD_LETTER_COL,
+    DEAD_LETTER_FIELDS,
+    dead_letter_column,
     decode_messages,
     dead_letter_split,
     idempotent_jdbc_table_sink,
@@ -165,11 +177,13 @@ def _require(kwargs: dict, key: str, block: str) -> Any:
 
 @dataclass
 class FlowRunner:
-    """One compiled flow = one StreamingQuery (SURVEY.md §1.1 Flow)."""
+    """One compiled flow (SURVEY.md §1.1 Flow): one StreamingQuery, plus
+    a ``<flow>_dead`` parquet query when the sink does not take the
+    dead side itself (``dead`` is None when it does)."""
 
     name: str
-    stream: DataFrame  # mapped, good rows
-    dead: DataFrame  # dead-letter rows
+    stream: DataFrame  # mapped rows
+    dead: DataFrame | None  # dead-letter rows, for a second query
     writer_factory: Any  # (DataFrame) -> DataStreamWriter
     dead_path: str | None
     checkpoint_dir: str
@@ -182,7 +196,7 @@ class FlowRunner:
         if available_now:
             writer = writer.trigger(availableNow=True)
         queries = [writer.queryName(self.name).start()]
-        if self.dead_path is not None:
+        if self.dead is not None and self.dead_path is not None:
             dlq = (
                 self.dead.writeStream.format("parquet")
                 .option("path", self.dead_path)
@@ -195,6 +209,27 @@ class FlowRunner:
                 dlq = dlq.trigger(availableNow=True)
             queries.append(dlq.queryName(self.name + "_dead").start())
         return queries
+
+
+def _check_one_query_flow(
+    flow_name: str, mapper: ParametersMapper, dead_path: str | None
+) -> None:
+    """Config errors of a flow whose sql sink takes the dead side."""
+    if any(name == DEAD_LETTER_COL for name, _ in mapper.items or []):
+        raise PipelineError(
+            f"flow {flow_name!r}: parameter name {DEAD_LETTER_COL!r} is "
+            "reserved for the dead-letter column of sql flows"
+        )
+    if dead_path and os.path.isdir(os.path.join(dead_path, "_spark_metadata")):
+        # Spark reads a dir holding _spark_metadata through that log
+        # only, so the per-batch files written from now on would be
+        # silently hidden from every reader
+        raise PipelineError(
+            f"dead-letter dir {dead_path!r} holds a _spark_metadata log "
+            "from a separate dead-letter query; sql flows now write their "
+            "dead rows as plain per-batch files there. Move the old "
+            "directory aside (or choose another --dead-letter-dir)"
+        )
 
 
 def compile_pipeline(
@@ -263,9 +298,23 @@ def compile_pipeline(
 
         # --- decode + split + map -----------------------------------------
         decoded = decode_messages(env)
-        good, dead = dead_letter_split(decoded)
         mapper = ParametersMapper(dst_ref.kwargs.get("parameters"))
-        mapped = mapper.apply(good, payload_col="payload")
+        dead_path = (
+            os.path.join(dead_letter_dir, flow_name) if dead_letter_dir else None
+        )
+        if dst.type == "sql":
+            # one query: the sql sinks split the dead rows off per task
+            _check_one_query_flow(flow_name, mapper, dead_path)
+            mapped = mapper.apply(
+                dead_letter_column(decoded),
+                payload_col="payload",
+                keep=[DEAD_LETTER_COL],
+            )
+            dead = None
+        else:
+            good, dead = dead_letter_split(decoded)
+            mapped = mapper.apply(good, payload_col="payload")
+            dead = dead.select(*DEAD_LETTER_FIELDS)
 
         # --- sink ----------------------------------------------------------
         # the time half of the count-or-time policy applies to every
@@ -294,6 +343,7 @@ def compile_pipeline(
                 policy=spec.policy,
                 positional=mapper.positional,
                 setup=merged_sql.get("setup"),
+                dead_letter_dir=dead_path,
             )
             sql_url = _require(dst.kwargs, "url", dst.name)
             if shards > 1:
@@ -410,13 +460,9 @@ def compile_pipeline(
             FlowRunner(
                 name=flow_name,
                 stream=mapped,
-                dead=dead.select("exchange", "content_type", "body", "dead_reason"),
+                dead=dead,
                 writer_factory=writer_factory,
-                dead_path=(
-                    os.path.join(dead_letter_dir, flow_name)
-                    if dead_letter_dir
-                    else None
-                ),
+                dead_path=dead_path,
                 checkpoint_dir=checkpoint_dir,
             )
         )

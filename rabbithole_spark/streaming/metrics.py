@@ -72,25 +72,3 @@ def attach_metrics(spark: SparkSession) -> FlowMetricsListener:
     spark.streams.addListener(listener)
     return listener
 
-
-def use_rocksdb_state(spark: SparkSession) -> None:
-    """Switch streaming state to the RocksDB provider (spillable,
-    incremental-checkpointing) instead of the default in-JVM-heap
-    HDFS-backed map.
-
-    At scale, stateful operators (dedup, session windows, stream-stream
-    joins) hold state proportional to key cardinality x watermark
-    horizon; RocksDB keeps it off-heap and on local SSD with changelog
-    checkpointing, so executors stop OOMing on wide state. Session-wide
-    conf: set before starting the queries that need it."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    # changelog checkpointing ships deltas, not full SST snapshots
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing."
-        "enabled",
-        "true",
-    )

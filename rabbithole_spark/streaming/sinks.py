@@ -7,15 +7,21 @@
   content-type warning (amqp.py:101-103) is not reproduced. The
   validity check is the only parse before the mapper's: good rows pass
   the body on as ``payload`` unchanged.
+- dead_letter_column / DeadLetters: a sql flow keeps its dead rows in
+  the reserved ``_dead_letter`` struct column, and the sql sinks split
+  them off inside the task that already holds the batch — one query per
+  flow, one read and one parse per message (the reference acks or nacks
+  inside its one consumer loop, amqp.py:101-109).
 - sql_sink: parameterized-SQL foreachBatch sink; SQL errors are logged
   and the batch dropped, the stream continues (sql.py:99-105 parity,
   at-most-once per batch — documented).
-- parquet/dead-letter writers: the durable, replayable upgrades.
+- parquet writers: the durable, replayable upgrades.
 """
 
 from __future__ import annotations
 
 import logging
+import os
 import re
 from collections.abc import Callable
 
@@ -25,6 +31,12 @@ from pyspark.sql import functions as F
 from rabbithole_spark.streaming.batcher import BatchPolicy
 
 LOGGER = logging.getLogger(__name__)
+
+#: Reserved struct column of a sql flow: the dead-letter fields of an
+#: undecodable message, NULL on every good row.
+DEAD_LETTER_COL = "_dead_letter"
+DEAD_LETTER_FIELDS = ("exchange", "content_type", "body", "dead_reason")
+
 
 def _is_valid_json(body: Column) -> Column:
     # get_json_object('$') is NULL exactly when the body does not parse.
@@ -59,8 +71,111 @@ def dead_letter_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return good, dead
 
 
-def _batch_params(batch_df: DataFrame, positional: bool) -> list:
+def dead_letter_column(df: DataFrame) -> DataFrame:
+    """One-stream twin of :func:`dead_letter_split` for the sql sinks.
+
+    ``payload`` is the body on good rows and NULL on dead ones;
+    :data:`DEAD_LETTER_COL` holds the dead-letter fields on dead rows
+    and is NULL on good ones. The sink splits the two per batch
+    (:class:`DeadLetters`), so no second query re-reads the source."""
+    good = F.col("dead_reason").isNull()
+    return df.select(
+        F.when(good, F.col("body")).alias("payload"),
+        F.when(~good, F.struct(*DEAD_LETTER_FIELDS)).alias(DEAD_LETTER_COL),
+    )
+
+
+class DeadLetters:
+    """The dead side of one (batch, partition) of a sql flow.
+
+    :meth:`split` drops :data:`DEAD_LETTER_COL` from an Arrow batch and
+    keeps only its good rows; the dead rows are kept for :meth:`write`
+    when there is a dead-letter dir, and dropped when there is none.
+    :meth:`write` publishes them as
+    ``<dir>/batch-<id:08d>-part-<pid:04d>.parquet`` through a
+    ``.``-prefixed temp name and ``os.replace``: a replayed batch
+    overwrites its file and never duplicates it. Readers (Spark,
+    ``pyarrow.dataset``) skip ``.``- and ``_``-prefixed names, so a
+    half-written temp file is never read. A replay puts the same rows
+    in the same partition because ``repartition(N)`` sorts before it
+    round-robins — the assumption the ``_shard_done`` marker makes too.
+    """
+
+    def __init__(self, dead_dir: str | None):
+        self.dead_dir = dead_dir
+        self.chunks: list = []  # StructArrays of dead rows
+
+    def split(self, batch):
+        """``batch`` (RecordBatch or Table) without the dead column and
+        without its dead rows; unchanged when it has no dead column."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        idx = batch.schema.get_field_index(DEAD_LETTER_COL)
+        if idx < 0:
+            return batch
+        col = batch.column(idx)
+        if self.dead_dir is not None:
+            dead = col.filter(pc.is_valid(col))
+            if isinstance(dead, pa.ChunkedArray):
+                self.chunks.extend(dead.chunks)
+            else:
+                self.chunks.append(dead)
+        return batch.filter(pc.is_null(col)).drop_columns([DEAD_LETTER_COL])
+
+    def split_rows(self, names: list[str], rows: list) -> list[tuple]:
+        """:meth:`split` for collected Rows: the good rows as value
+        tuples without the dead column (``names`` are the columns)."""
+        if DEAD_LETTER_COL not in names:
+            return [tuple(row) for row in rows]
+        import pyarrow as pa
+
+        idx = names.index(DEAD_LETTER_COL)
+        dead = [row[idx] for row in rows if row[idx] is not None]
+        if dead and self.dead_dir is not None:
+            fields = [(name, pa.string()) for name in DEAD_LETTER_FIELDS]
+            self.chunks.append(
+                pa.array([d.asDict() for d in dead], type=pa.struct(fields))
+            )
+        return [
+            tuple(row[:idx]) + tuple(row[idx + 1 :])
+            for row in rows
+            if row[idx] is None
+        ]
+
+    def write(self, batch_id: int, part: int) -> None:
+        """Publish the kept dead rows, if there are any."""
+        if not any(len(c) for c in self.chunks):
+            return
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        table = pa.Table.from_batches(
+            [pa.RecordBatch.from_struct_array(c) for c in self.chunks]
+        )
+        os.makedirs(self.dead_dir, exist_ok=True)
+        name = f"batch-{batch_id:08d}-part-{part:04d}.parquet"
+        # unique per attempt: a speculative duplicate writes its own temp
+        tmp = os.path.join(self.dead_dir, f".{name}.{uuid.uuid4().hex}.tmp")
+        try:
+            pq.write_table(table, tmp)
+            os.replace(tmp, os.path.join(self.dead_dir, name))
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
+
+
+def _batch_params(
+    batch_df: DataFrame, positional: bool, dead: DeadLetters | None = None
+) -> list:
     """Micro-batch rows as executemany parameters (dicts or tuples).
+
+    A :data:`DEAD_LETTER_COL` column is split off on both paths: its
+    dead rows go to ``dead`` (dropped when it is None), the good rows
+    bind without it.
 
     Arrow transfer (``toArrow().to_pylist()`` — native Python values,
     None for NULL: byte-identical to what collect()/asDict() binds),
@@ -80,6 +195,7 @@ def _batch_params(batch_df: DataFrame, positional: bool) -> list:
     collect() form; and positional tuples are built column-wise, not
     through per-row dicts, so duplicate column names keep their arity
     (dict construction would silently drop one binding)."""
+    dead = dead or DeadLetters(None)
     if not batch_df.columns:
         # Zero-column edge (ADVICE r10): Spark's toArrow() drops the
         # row count for a no-column relation (0x0 table where collect()
@@ -87,8 +203,7 @@ def _batch_params(batch_df: DataFrame, positional: bool) -> list:
         # represent this batch — bind through collect() for parity.
         # Unreachable from compile_pipeline (the mapper always selects
         # >=1 column), but the two paths must agree for direct callers.
-        rows = batch_df.collect()
-        return [tuple(row) if positional else row.asDict() for row in rows]
+        return _row_params(batch_df, positional, dead)
     try:
         tbl = batch_df.toArrow()
     except Exception as exc:
@@ -102,9 +217,18 @@ def _batch_params(batch_df: DataFrame, positional: bool) -> list:
             type(exc).__name__,
             exc,
         )
-        rows = batch_df.collect()
-        return [tuple(row) if positional else row.asDict() for row in rows]
-    return _arrow_params(tbl, positional)
+        return _row_params(batch_df, positional, dead)
+    return _arrow_params(dead.split(tbl), positional)
+
+
+def _row_params(batch_df: DataFrame, positional: bool, dead: DeadLetters) -> list:
+    """:func:`_batch_params` through ``collect()``."""
+    names = batch_df.columns
+    rows = dead.split_rows(names, batch_df.collect())
+    if positional:
+        return rows
+    names = [n for n in names if n != DEAD_LETTER_COL]
+    return [dict(zip(names, row)) for row in rows]
 
 
 def _arrow_params(tbl, positional: bool) -> list:
@@ -164,6 +288,7 @@ def sql_sink(
     policy: BatchPolicy | None = None,
     positional: bool = False,
     setup: str | None = None,
+    dead_letter_dir: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch callable executing a parameterized SQL statement.
 
@@ -185,14 +310,22 @@ def sql_sink(
     Supported URLs: ``sqlite:///<path>`` (stdlib sqlite3, FILE paths
     only; see :func:`_sqlite_path`). For server databases use
     jdbc_table_sink — per-partition JDBC appends, the scale path.
+
+    Dead rows (:data:`DEAD_LETTER_COL`) are split off the batch the
+    driver already holds and written to ``dead_letter_dir`` as
+    ``batch-<id>-part-0000.parquet`` (:class:`DeadLetters`) before the
+    insert; with no dir they are dropped.
     """
     policy = policy or BatchPolicy()
     db_path = _sqlite_path(url)
+    dead_dir = os.path.abspath(dead_letter_dir) if dead_letter_dir else None
 
     def callback(batch_df: DataFrame, batch_id: int) -> None:
         import sqlite3
 
-        params = _batch_params(batch_df, positional)
+        dead = DeadLetters(dead_dir)
+        params = _batch_params(batch_df, positional, dead)
+        dead.write(batch_id, 0)
         if not params:
             return
         try:
@@ -220,6 +353,7 @@ def sharded_sql_sink(
     policy: BatchPolicy | None = None,
     positional: bool = False,
     setup: str | None = None,
+    dead_letter_dir: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Partition-parallel parameterized-SQL sink over N sqlite shard
     files — the scale (and steal-robust) upgrade of :func:`sql_sink`.
@@ -282,11 +416,20 @@ def sharded_sql_sink(
     FRESH checkpoint replays batch ids from 0 and the markers will
     skip them — shard files share their checkpoint's lifetime (the
     same contract as every batch-id-keyed sink here).
+
+    Dead rows (:data:`DEAD_LETTER_COL`) are split off each Arrow batch
+    in the same task and written to ``dead_letter_dir`` as
+    ``batch-<id>-part-<pid>.parquet`` (:class:`DeadLetters`), on every
+    path through the shard: committed, skipped as a duplicate, or
+    dropped by the error swallow. A replay overwrites the file. With no
+    dir they are dropped; a batch without the column binds as is.
     """
     policy = policy or BatchPolicy()
     if shards < 1:
         raise ValueError(f"shards must be >= 1, got {shards}")
     db_path = _sqlite_path(url)
+    # resolved driver-side for the reason _sqlite_path gives
+    dead_dir = os.path.abspath(dead_letter_dir) if dead_letter_dir else None
 
     def callback(batch_df: DataFrame, batch_id: int) -> None:
         chunks = policy.chunks
@@ -301,6 +444,8 @@ def sharded_sql_sink(
 
             pid = TaskContext.get().partitionId()
             shard_path = f"{db_path}.shard-{pid:04d}"
+            dead = DeadLetters(dead_dir)
+            good = (dead.split(rb) for rb in batches)
             written = 0
             con = None
             # connect() sits INSIDE the swallowing try (round-11 review):
@@ -326,7 +471,7 @@ def sharded_sql_sink(
                             "INSERT INTO _shard_done (batch_id) VALUES (?)",
                             (batch_id,),
                         )
-                        for rb in batches:
+                        for rb in good:
                             params = _arrow_params(
                                 pa.Table.from_batches([rb]), positional
                             )
@@ -373,6 +518,11 @@ def sharded_sql_sink(
             finally:
                 if con is not None:
                     con.close()
+            # a skipped or dropped shard left batches unread: their dead
+            # rows still leave from here
+            for _ in good:
+                pass
+            dead.write(batch_id, pid)
             yield pa.RecordBatch.from_pydict({"rows": [written]})
 
         # repartition(N) round-robins the micro-batch across exactly N

@@ -51,7 +51,7 @@ def test_rocksdb_state_store_runs_stateful_query(spark, tmp_path):
     """A watermarked streaming dedup executes on the RocksDB state
     store provider (verified from the query's own state-operator
     metrics), producing the same rows as the default provider."""
-    from rabbithole_spark.streaming.metrics import use_rocksdb_state
+    from rabbithole_spark.session import use_rocksdb_state
 
     src = str(tmp_path / "rocks_src")
     ev = table(spark, SF, "events").select("user_id", "event_type", "ts")

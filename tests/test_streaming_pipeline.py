@@ -5,6 +5,7 @@ SURVEY.md §3.1-3.2; error policy §2C.4)."""
 from __future__ import annotations
 
 import json
+import os
 import re
 import sqlite3
 
@@ -73,8 +74,14 @@ def test_pipeline_end_to_end(spark, spool, tmp_path):
         spark, spec, str(tmp_path / "ckpt"), dead_letter_dir=str(tmp_path / "dlq")
     )
     assert len(runners) == 1
-    for q in runners[0].start(available_now=True):
-        q.awaitTermination(120)
+    # the funnel sink takes the dead side itself: one query per flow
+    (query,) = runners[0].start(available_now=True)
+    query.awaitTermination(120)
+    assert os.listdir(tmp_path / "ckpt") == [runners[0].name]
+    assert [
+        n for n in os.listdir(tmp_path / "dlq" / runners[0].name)
+        if re.fullmatch(r"batch-\d{8}-part-0000\.parquet", n)
+    ]
 
     con = sqlite3.connect(db_path)
     rows = sorted(con.execute("SELECT timestamp, message FROM logs").fetchall())
@@ -88,6 +95,7 @@ def test_pipeline_end_to_end(spark, spool, tmp_path):
     assert len(dead) == 1
     assert dead[0]["dead_reason"] == "undecodable body"
     assert dead[0]["body"] == "not json {"
+    assert dead[0]["content_type"] == "text/plain"
 
 
 def _json_parses(plan: str) -> dict[str, int]:
@@ -139,6 +147,62 @@ def test_flow_parses_each_message_once(spark, spool, tmp_path):
     assert rows[0] == (
         "2024-01-01T00:00:00", '{"text":"msg-0"}', "msg-0", None, None
     )
+
+
+def test_sharded_flow_with_dead_letters_runs_one_query(spark, spool, tmp_path):
+    """A ``shards: N`` flow with a dead-letter dir is one streaming
+    query: its dead rows leave from the sink tasks, so the plan parses
+    each message once and no ``<flow>_dead`` query or checkpoint
+    exists. The dead dir reads back as the four dead-letter columns."""
+    db_path = str(tmp_path / "out.sqlite")
+    cfg = _config(spool, db_path)
+    cfg["flows"][0][1]["kwargs"]["shards"] = 3
+    cfg["flows"][0][1]["kwargs"]["setup"] = (
+        "CREATE TABLE IF NOT EXISTS logs (timestamp TEXT, message TEXT)"
+    )
+    dlq = tmp_path / "dlq"
+    (runner,) = compile_pipeline(
+        spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt"), str(dlq)
+    )
+    queries = runner.start(available_now=True)
+    assert len(queries) == 1
+    (query,) = queries
+    query.awaitTermination(120)
+    assert query.exception() is None
+    plan = query._jsq.explainInternal(False)
+    parses = _json_parses(plan)
+    assert {k: parses[k] for k in ("envelope", "validity", "payload")} == {
+        "envelope": 1, "validity": 1, "payload": 1
+    }, plan
+    assert not (tmp_path / "ckpt" / (runner.name + "_dead")).exists()
+    assert len(_shard_rows(db_path, "SELECT message FROM logs")) == 7
+    dead = spark.read.parquet(str(dlq / runner.name))
+    assert sorted(dead.columns) == sorted(
+        ["exchange", "content_type", "body", "dead_reason"]
+    )
+    assert [tuple(r) for r in dead.select(
+        "exchange", "content_type", "body", "dead_reason"
+    ).collect()] == [("logs", "text/plain", "not json {", "undecodable body")]
+
+
+def test_one_query_flow_config_guards(spark, spool, tmp_path):
+    """A sql flow refuses, at compile time, a dead-letter dir that
+    holds the ``_spark_metadata`` log of a separate dead-letter query
+    (Spark would read only the files that log lists) and a parameter
+    named like the reserved dead-letter column."""
+    cfg = _config(spool, str(tmp_path / "out.sqlite"))
+    dlq = tmp_path / "dlq"
+    (runner,) = compile_pipeline(
+        spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt"), str(dlq)
+    )
+    (dlq / runner.name / "_spark_metadata").mkdir(parents=True)
+    with pytest.raises(PipelineError, match="_spark_metadata"):
+        compile_pipeline(
+            spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt"), str(dlq)
+        )
+    cfg["flows"][0][1]["kwargs"]["parameters"]["_dead_letter"] = "timestamp"
+    with pytest.raises(PipelineError, match="reserved"):
+        compile_pipeline(spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt"))
 
 
 def test_spool_envelope_rows_per_line(spark, tmp_path):
@@ -817,6 +881,122 @@ def test_sharded_sink_matches_driver_funnel_values(spark, tmp_path):
     con.close()
     got = sorted(_shard_rows(sharded, "SELECT id, v, s FROM t"))
     assert got == want and len(want) == 50
+
+
+def _with_dead_letters(spark, n=40, every=5):
+    """A mapped batch as a sql flow hands it to its sink: the reserved
+    ``_dead_letter`` struct first, set on every ``every``-th row."""
+    from pyspark.sql import functions as F
+
+    dead = F.col("id") % every == 0
+    letter = F.struct(
+        F.lit("logs").alias("exchange"),
+        F.lit("text/plain").alias("content_type"),
+        F.concat(F.lit("bad-"), F.col("id").cast("string")).alias("body"),
+        F.lit("undecodable body").alias("dead_reason"),
+    )
+    return spark.range(n).select(
+        F.when(dead, letter).alias("_dead_letter"),
+        F.when(~dead, F.col("id")).alias("id"),
+    )
+
+
+def _dead_bodies(path):
+    import pyarrow.dataset as ds
+
+    if not os.path.isdir(path):
+        return []
+    return sorted(ds.dataset(path, format="parquet").to_table()["body"].to_pylist())
+
+
+def _no_temp_files(path):
+    return not [n for n in os.listdir(path) if n.startswith((".", "_"))]
+
+
+def test_sharded_sink_dead_rows_replay_overwrites(spark, tmp_path):
+    """Dead rows leave from every path through a shard task: a replayed
+    batch id rewrites the same dead files (no duplicates), an attempt
+    that every ``_shard_done`` marker skips still writes them, and no
+    ``.``-prefixed temp file is left behind."""
+    from rabbithole_spark.streaming.sinks import sharded_sql_sink
+
+    db = str(tmp_path / "out.sqlite")
+    dlq = str(tmp_path / "dlq")
+    cb = sharded_sql_sink(
+        f"sqlite:///{db}", "INSERT INTO t VALUES (?)", shards=3,
+        positional=True, setup="CREATE TABLE IF NOT EXISTS t (id INTEGER)",
+        dead_letter_dir=dlq,
+    )
+    df = _with_dead_letters(spark)
+    want = sorted(f"bad-{i}" for i in range(0, 40, 5))
+    cb(df, 3)
+    first = sorted(os.listdir(dlq))
+    assert first and all(
+        re.fullmatch(r"batch-00000003-part-\d{4}\.parquet", n) for n in first
+    )
+    assert _dead_bodies(dlq) == want
+    cb(df, 3)  # replay: every shard skips, every dead file is rewritten
+    assert sorted(os.listdir(dlq)) == first
+    assert _dead_bodies(dlq) == want
+    for name in first:
+        os.remove(os.path.join(dlq, name))
+    cb(df, 3)  # a skipped attempt still writes its dead rows
+    assert _dead_bodies(dlq) == want
+    assert sorted(_shard_rows(db, "SELECT id FROM t")) == [
+        (i,) for i in range(40) if i % 5
+    ]
+    assert _no_temp_files(dlq)
+
+
+def test_sharded_sink_swallowed_shard_still_writes_dead_rows(spark, tmp_path):
+    """A shard whose SQL error is swallowed drops its good rows, but
+    its dead rows are still written."""
+    from rabbithole_spark.streaming.sinks import sharded_sql_sink
+
+    db = str(tmp_path / "out.sqlite")
+    dlq = str(tmp_path / "dlq")
+    cb = sharded_sql_sink(
+        f"sqlite:///{db}", "INSERT INTO t VALUES (?)", shards=2,
+        positional=True, setup="CREATE TABLE IF NOT EXISTS wrong (x TEXT)",
+        dead_letter_dir=dlq,
+    )
+    cb(_with_dead_letters(spark), 0)
+    assert _dead_bodies(dlq) == sorted(f"bad-{i}" for i in range(0, 40, 5))
+    assert _no_temp_files(dlq)
+
+
+def test_funnel_sink_splits_dead_rows_on_both_paths(spark, tmp_path):
+    """The funnel sink splits the dead rows off the batch it pulls to
+    the driver, over Arrow and over the collect() fallback alike, and
+    drops them when there is no dead-letter dir."""
+    from rabbithole_spark.streaming.sinks import sql_sink
+
+    ddl = "CREATE TABLE IF NOT EXISTS t (id INTEGER)"
+    want_rows = [(i,) for i in range(40) if i % 5]
+    want_dead = sorted(f"bad-{i}" for i in range(0, 40, 5))
+    for fallback in (False, True):
+        db = str(tmp_path / f"out{fallback}.sqlite")
+        dlq = str(tmp_path / f"dlq{fallback}")
+        df = _with_dead_letters(spark)
+        if fallback:
+            df.toArrow = lambda: (_ for _ in ()).throw(  # type: ignore[method-assign]
+                RuntimeError("simulated arrow failure")
+            )
+        sql_sink(
+            f"sqlite:///{db}", "INSERT INTO t VALUES (:id)", setup=ddl,
+            dead_letter_dir=dlq,
+        )(df, 2)
+        assert os.listdir(dlq) == ["batch-00000002-part-0000.parquet"]
+        assert _dead_bodies(dlq) == want_dead
+        con = sqlite3.connect(db)
+        assert sorted(con.execute("SELECT id FROM t").fetchall()) == want_rows
+        con.close()
+    db = str(tmp_path / "nodlq.sqlite")
+    sql_sink(f"sqlite:///{db}", "INSERT INTO t VALUES (?)", positional=True,
+             setup=ddl)(_with_dead_letters(spark), 0)
+    con = sqlite3.connect(db)
+    assert sorted(con.execute("SELECT id FROM t").fetchall()) == want_rows
+    con.close()
 
 
 def test_fold_sqlite_shards_into_single_file(tmp_path):
