@@ -7,15 +7,18 @@ shape compiles here to one StreamingQuery per flow:
 
     readStream (block) -> exchange demux -> decode
       -> payload + _dead_letter projection -> ParametersMapper select
-         (keeps _dead_letter) -> foreachBatch sql sink, trigger(policy)
-           per task: good rows -> sqlite; dead rows -> one parquet
-           file per (batch, partition) under <dead_letter_dir>/<flow>
+         (keeps _dead_letter) -> output, trigger(policy)
+           sql: per sink task, good rows -> sqlite and dead rows ->
+                one parquet file per (batch, partition)
+           jdbc, parquet, memory, spool: a mapInArrow passthrough
+                writes the same files and hands the good rows on
 
-The dead rows leave from the sink task that already parsed them, so
-one source read, one parse and one offset log serve both sides. The
-jdbc, parquet, memory and spool outputs keep the two-stream shape:
-a dead-letter split, with the dead side as a second streaming
-parquet query (``<flow>_dead``) when a dead-letter dir is given.
+The dead rows leave from the first Python task that holds the batch,
+so one source read, one parse and one offset log serve both sides, and
+every output lays its dead rows out as
+``<dead_letter_dir>/<flow>/batch-<id>-part-<pid>.parquet``. Without a
+dead-letter dir the flow maps the good side of ``dead_letter_split``
+and drops the dead rows.
 
 Unlike the reference (side effects while instantiating blocks,
 cli.py:97-106), compilation is fully lazy — nothing connects until
@@ -38,10 +41,10 @@ from rabbithole_spark.plans.mapper import ParametersMapper
 from rabbithole_spark.streaming.batcher import BatchPolicy
 from rabbithole_spark.streaming.sinks import (
     DEAD_LETTER_COL,
-    DEAD_LETTER_FIELDS,
     dead_letter_column,
-    decode_messages,
+    dead_letter_passthrough,
     dead_letter_split,
+    decode_messages,
     idempotent_jdbc_table_sink,
     jdbc_table_sink,
     sharded_parquet_sink,
@@ -177,15 +180,11 @@ def _require(kwargs: dict, key: str, block: str) -> Any:
 
 @dataclass
 class FlowRunner:
-    """One compiled flow (SURVEY.md §1.1 Flow): one StreamingQuery, plus
-    a ``<flow>_dead`` parquet query when the sink does not take the
-    dead side itself (``dead`` is None when it does)."""
+    """One compiled flow (SURVEY.md §1.1 Flow): one StreamingQuery."""
 
     name: str
     stream: DataFrame  # mapped rows
-    dead: DataFrame | None  # dead-letter rows, for a second query
     writer_factory: Any  # (DataFrame) -> DataStreamWriter
-    dead_path: str | None
     checkpoint_dir: str
 
     def start(self, available_now: bool = False):
@@ -195,30 +194,17 @@ class FlowRunner:
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
-        queries = [writer.queryName(self.name).start()]
-        if self.dead is not None and self.dead_path is not None:
-            dlq = (
-                self.dead.writeStream.format("parquet")
-                .option("path", self.dead_path)
-                .option(
-                    "checkpointLocation",
-                    os.path.join(self.checkpoint_dir, self.name + "_dead"),
-                )
-            )
-            if available_now:
-                dlq = dlq.trigger(availableNow=True)
-            queries.append(dlq.queryName(self.name + "_dead").start())
-        return queries
+        return [writer.queryName(self.name).start()]
 
 
 def _check_one_query_flow(
     flow_name: str, mapper: ParametersMapper, dead_path: str | None
 ) -> None:
-    """Config errors of a flow whose sql sink takes the dead side."""
+    """Config errors of the one-query flow shape."""
     if any(name == DEAD_LETTER_COL for name, _ in mapper.items or []):
         raise PipelineError(
             f"flow {flow_name!r}: parameter name {DEAD_LETTER_COL!r} is "
-            "reserved for the dead-letter column of sql flows"
+            "reserved for the dead-letter column"
         )
     if dead_path and os.path.isdir(os.path.join(dead_path, "_spark_metadata")):
         # Spark reads a dir holding _spark_metadata through that log
@@ -226,7 +212,7 @@ def _check_one_query_flow(
         # silently hidden from every reader
         raise PipelineError(
             f"dead-letter dir {dead_path!r} holds a _spark_metadata log "
-            "from a separate dead-letter query; sql flows now write their "
+            "from a separate dead-letter query; flows now write their "
             "dead rows as plain per-batch files there. Move the old "
             "directory aside (or choose another --dead-letter-dir)"
         )
@@ -296,25 +282,25 @@ def compile_pipeline(
         else:
             raise PipelineError(f"Block {src.name!r} is not an input type")
 
-        # --- decode + split + map -----------------------------------------
+        # --- decode + map: one query, whatever the output ---------------
         decoded = decode_messages(env)
         mapper = ParametersMapper(dst_ref.kwargs.get("parameters"))
         dead_path = (
             os.path.join(dead_letter_dir, flow_name) if dead_letter_dir else None
         )
-        if dst.type == "sql":
-            # one query: the sql sinks split the dead rows off per task
-            _check_one_query_flow(flow_name, mapper, dead_path)
+        _check_one_query_flow(flow_name, mapper, dead_path)
+        if dead_path is None:
+            good, _ = dead_letter_split(decoded)
+            mapped = mapper.apply(good, payload_col="payload")
+        else:
             mapped = mapper.apply(
                 dead_letter_column(decoded),
                 payload_col="payload",
                 keep=[DEAD_LETTER_COL],
             )
-            dead = None
-        else:
-            good, dead = dead_letter_split(decoded)
-            mapped = mapper.apply(good, payload_col="payload")
-            dead = dead.select(*DEAD_LETTER_FIELDS)
+            if dst.type != "sql":
+                # the sql sinks split the dead rows off in their own task
+                mapped = dead_letter_passthrough(mapped, dead_path)
 
         # --- sink ----------------------------------------------------------
         # the time half of the count-or-time policy applies to every
@@ -413,7 +399,11 @@ def compile_pipeline(
         elif dst.type == "memory":
 
             def writer_factory(df: DataFrame):
-                return df.writeStream.format("memory").outputMode("append")
+                return (
+                    df.writeStream.format("memory")
+                    .outputMode("append")
+                    .trigger(**trigger_kwargs)
+                )
 
         elif dst.type == "spool":
             # relay flow: re-envelope the mapped projection and publish
@@ -460,9 +450,7 @@ def compile_pipeline(
             FlowRunner(
                 name=flow_name,
                 stream=mapped,
-                dead=dead,
                 writer_factory=writer_factory,
-                dead_path=dead_path,
                 checkpoint_dir=checkpoint_dir,
             )
         )

@@ -7,11 +7,13 @@
   content-type warning (amqp.py:101-103) is not reproduced. The
   validity check is the only parse before the mapper's: good rows pass
   the body on as ``payload`` unchanged.
-- dead_letter_column / DeadLetters: a sql flow keeps its dead rows in
-  the reserved ``_dead_letter`` struct column, and the sql sinks split
-  them off inside the task that already holds the batch — one query per
-  flow, one read and one parse per message (the reference acks or nacks
-  inside its one consumer loop, amqp.py:101-109).
+- dead_letter_column / DeadLetters: a flow with a dead-letter dir keeps
+  its dead rows in the reserved ``_dead_letter`` struct column and
+  splits them off inside the first Python task that holds the batch:
+  the sql sinks' own tasks, or dead_letter_passthrough in front of
+  every other output. One query per flow, one read and one parse per
+  message (the reference acks or nacks inside its one consumer loop,
+  amqp.py:101-109).
 - sql_sink: parameterized-SQL foreachBatch sink; SQL errors are logged
   and the batch dropped, the stream continues (sql.py:99-105 parity,
   at-most-once per batch — documented).
@@ -27,13 +29,14 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from rabbithole_spark.streaming.batcher import BatchPolicy
 
 LOGGER = logging.getLogger(__name__)
 
-#: Reserved struct column of a sql flow: the dead-letter fields of an
-#: undecodable message, NULL on every good row.
+#: Reserved struct column of a flow with a dead-letter dir: the
+#: dead-letter fields of an undecodable message, NULL on every good row.
 DEAD_LETTER_COL = "_dead_letter"
 DEAD_LETTER_FIELDS = ("exchange", "content_type", "body", "dead_reason")
 
@@ -72,11 +75,11 @@ def dead_letter_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def dead_letter_column(df: DataFrame) -> DataFrame:
-    """One-stream twin of :func:`dead_letter_split` for the sql sinks.
+    """One-stream twin of :func:`dead_letter_split`.
 
     ``payload`` is the body on good rows and NULL on dead ones;
     :data:`DEAD_LETTER_COL` holds the dead-letter fields on dead rows
-    and is NULL on good ones. The sink splits the two per batch
+    and is NULL on good ones. A task splits the two per batch
     (:class:`DeadLetters`), so no second query re-reads the source."""
     good = F.col("dead_reason").isNull()
     return df.select(
@@ -86,7 +89,7 @@ def dead_letter_column(df: DataFrame) -> DataFrame:
 
 
 class DeadLetters:
-    """The dead side of one (batch, partition) of a sql flow.
+    """The dead side of one (batch, partition) of a flow.
 
     :meth:`split` drops :data:`DEAD_LETTER_COL` from an Arrow batch and
     keeps only its good rows; the dead rows are kept for :meth:`write`
@@ -96,9 +99,11 @@ class DeadLetters:
     ``.``-prefixed temp name and ``os.replace``: a replayed batch
     overwrites its file and never duplicates it. Readers (Spark,
     ``pyarrow.dataset``) skip ``.``- and ``_``-prefixed names, so a
-    half-written temp file is never read. A replay puts the same rows
-    in the same partition because ``repartition(N)`` sorts before it
-    round-robins — the assumption the ``_shard_done`` marker makes too.
+    half-written temp file is never read. A replay rewrites the same
+    files when it puts the same rows in the same partitions: the
+    sharded sql sink's ``repartition(N)`` sorts before it round-robins
+    (the assumption its ``_shard_done`` marker makes too), and
+    :func:`dead_letter_passthrough` keys its files by source partition.
     """
 
     def __init__(self, dead_dir: str | None):
@@ -166,6 +171,45 @@ class DeadLetters:
             if os.path.exists(tmp):
                 os.remove(tmp)
             raise
+
+
+#: Local property Spark sets on every job of a streaming micro-batch.
+_BATCH_ID_KEY = "streaming.sql.batchId"
+
+
+def dead_letter_passthrough(df: DataFrame, dead_letter_dir: str) -> DataFrame:
+    """``df`` without :data:`DEAD_LETTER_COL` and without its dead rows,
+    for the outputs that do not split them off themselves.
+
+    One ``mapInArrow`` stage in the flow's own query: each task splits
+    its Arrow batches (:meth:`DeadLetters.split`) and, at the end of its
+    partition, writes the dead rows as ``batch-<id>-part-<pid>.parquet``
+    (:meth:`DeadLetters.write`). ``<id>`` is the micro-batch id Spark
+    sets on the batch's tasks, ``<pid>`` the task's partition, which
+    follows the source's partitioning. A replay overwrites its files
+    only when the source plans the batch into the same partitions.
+    """
+    dead_dir = os.path.abspath(dead_letter_dir)
+    schema = StructType(
+        [f for f in df.schema.fields if f.name != DEAD_LETTER_COL]
+    )
+
+    def split_partition(batches):
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        batch_id = ctx.getLocalProperty(_BATCH_ID_KEY)
+        if batch_id is None:
+            raise RuntimeError(
+                "dead-letter passthrough outside a streaming batch: "
+                f"no {_BATCH_ID_KEY} to name the dead-letter files by"
+            )
+        dead = DeadLetters(dead_dir)
+        for rb in batches:
+            yield dead.split(rb)
+        dead.write(int(batch_id), ctx.partitionId())
+
+    return df.mapInArrow(split_partition, schema)
 
 
 def _batch_params(
@@ -734,101 +778,11 @@ def idempotent_jdbc_table_sink(
     return callback
 
 
-def cdc_upsert_sink(path: str) -> Callable[[DataFrame, int], None]:
-    """CDC merge sink, LSM-style: each micro-batch APPENDS its change
-    rows (tagged with the batch id) instead of rewriting the table.
-
-    Upsert-by-rewrite costs a full table scan per batch; at 100 TB the
-    scalable shape is append-only deltas + merge-on-read
-    (:func:`cdc_current_state`) + periodic compaction
-    (:func:`cdc_compact`) — the pattern Delta/Iceberg/Hudi implement,
-    expressed on plain parquet. Appends are also replay-idempotent at
-    read time: a replayed batch re-appends identical rows with the
-    same batch id, and last-write-wins resolution collapses them.
-    """
-
-    def callback(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(path)
-        )
-
-    return callback
-
-
-def cdc_current_state(
-    spark,
-    path: str,
-    key_cols: list[str],
-    seq_cols: list[str] | None = None,
-    op_col: str | None = None,
-) -> DataFrame:
-    """Merge-on-read resolution of a CDC delta log: latest row per key
-    wins (ordered by __batch_id then ``seq_cols``); rows whose
-    ``op_col`` is 'd' are deletions and drop out of the state.
-
-    One window shuffle on the key columns — the same cost profile as
-    the MERGE a table format would run, but pay-per-query instead of
-    pay-per-ingest-batch."""
-    from pyspark.sql import Window
-
-    order = [F.col("__batch_id").desc()] + [
-        F.col(c).desc() for c in (seq_cols or [])
-    ]
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    latest = (
-        spark.read.parquet(path)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__batch_id")
-    )
-    if op_col is not None:
-        latest = latest.filter(
-            F.coalesce(F.col(op_col), F.lit("u")) != "d"
-        ).drop(op_col)
-    return latest
-
-
-def cdc_compact(
-    spark,
-    path: str,
-    key_cols: list[str],
-    seq_cols: list[str] | None = None,
-    op_col: str | None = None,
-) -> int:
-    """Fold the delta log into one resolved snapshot (batch id 0).
-
-    Writes the current state to a sibling directory, then swaps it in
-    with two adjacent renames (old -> trash, snapshot -> path) and
-    removes the old log only after the swap — so a crash at any point
-    leaves either the full old log or the full snapshot recoverable
-    on disk, never neither (plain rmtree-then-rename would delete the
-    only copy first). Returns the number of rows in the snapshot.
-    Read cost returns to a plain scan until new deltas accumulate.
-
-    QUIESCE THE WRITER FIRST: compaction folds a point-in-time
-    snapshot, so deltas appended by a concurrently running
-    cdc_upsert_sink between the snapshot read and the swap would be
-    dropped from the table (their checkpoint entries will not
-    replay). Run it between micro-batches or with the stream stopped
-    — the same contract as table-format compaction without a
-    transaction log. An object store would commit a new manifest
-    instead of renaming.
-    """
-    state = cdc_current_state(spark, path, key_cols, seq_cols, op_col)
-    if op_col is not None:
-        state = state.withColumn(op_col, F.lit("u"))
-    compacted = state.withColumn("__batch_id", F.lit(0))
-    return _swap_in_parquet(spark, compacted, path, tag="compact")
-
-
 def _swap_in_parquet(spark, df: DataFrame, path: str, tag: str) -> int:
     """Crash-safe replacement of a parquet directory with ``df``
-    (shared by :func:`cdc_compact` and :func:`fold_parquet_shards` —
-    one place to fix the swap, round-12 review): write the new copy to
-    a sibling ``__<tag>_tmp``, then two adjacent renames (old ->
-    trash, tmp -> path) and remove the trash LAST — a crash at any
+    (used by :func:`fold_parquet_shards`): write the new copy to a
+    sibling ``__<tag>_tmp``, then two adjacent renames (old -> trash,
+    tmp -> path) and remove the trash LAST — a crash at any
     point leaves either the complete old tree or the complete new one
     recoverable on disk, never neither (rmtree-then-rename would
     delete the only copy first). Returns the written row count. An
@@ -920,11 +874,10 @@ def fold_parquet_shards(spark, path: str, target_files: int | None = None) -> in
     for consumers that want a plain table and for reclaiming the
     small-file overhead a long-running stream accumulates.
 
-    Same crash-safe swap as :func:`cdc_compact` (shared
-    :func:`_swap_in_parquet`): write the folded copy to a sibling,
-    rename old -> trash, move the copy in, remove trash last — a
-    crash at any point leaves a complete tree or a complete snapshot
-    on disk, never neither. QUIESCE THE WRITER FIRST: batches
+    Crash-safe swap (:func:`_swap_in_parquet`): write the folded copy
+    to a sibling, rename old -> trash, move the copy in, remove trash
+    last — a crash at any point leaves a complete tree or a complete
+    snapshot on disk, never neither. QUIESCE THE WRITER FIRST: batches
     appended between the snapshot read and the swap would be lost, and
     a post-fold stream restart needs a fresh checkpoint (the flat
     layout no longer has per-batch partitions to overwrite). Returns

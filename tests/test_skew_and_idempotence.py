@@ -53,48 +53,6 @@ def test_salted_left_join_keeps_unmatched(spark):
     assert by_row == {10: "one", 11: "one", 12: None}
 
 
-def test_cdc_upsert_merge_on_read_and_compact(spark, tmp_path):
-    """Append-only CDC deltas resolve last-write-wins per key (deletes
-    drop out); compaction preserves the state while folding the log."""
-    from rabbithole_spark.streaming.sinks import (
-        cdc_compact,
-        cdc_current_state,
-        cdc_upsert_sink,
-    )
-
-    path = str(tmp_path / "cdc_table")
-    sink = cdc_upsert_sink(path)
-    b0 = spark.createDataFrame(
-        [(1, "alice", 10.0, "u"), (2, "bob", 20.0, "u"), (3, "carol", 30.0, "u")],
-        "id long, name string, score double, op string",
-    )
-    b1 = spark.createDataFrame(
-        [(2, "bob", 25.0, "u"), (3, "carol", 0.0, "d"), (4, "dave", 40.0, "u")],
-        "id long, name string, score double, op string",
-    )
-    sink(b0, 0)
-    sink(b1, 1)
-    state = {
-        r.id: r.score
-        for r in cdc_current_state(spark, path, ["id"], op_col="op").collect()
-    }
-    assert state == {1: 10.0, 2: 25.0, 4: 40.0}
-    # replayed batch (same id) must not change the state
-    sink(b1, 1)
-    state2 = {
-        r.id: r.score
-        for r in cdc_current_state(spark, path, ["id"], op_col="op").collect()
-    }
-    assert state2 == state
-    n = cdc_compact(spark, path, ["id"], op_col="op")
-    assert n == 3
-    state3 = {
-        r.id: r.score
-        for r in cdc_current_state(spark, path, ["id"], op_col="op").collect()
-    }
-    assert state3 == state
-
-
 def test_sharded_parquet_sink_replay_supersedes_partial_attempt(spark, tmp_path):
     """A replayed micro-batch overwrites only its own partition: the
     corrected replay supersedes the earlier partial attempt, other

@@ -116,7 +116,9 @@ def test_flow_parses_each_message_once(spark, spool, tmp_path):
     """The executed plan of a spool -> sql flow parses each message's
     envelope once, checks the body once and parses the body once more
     for the mapper. Only a path below a node that is itself mapped
-    (``message.text`` under ``message``) keeps its own get_json_object."""
+    (``message.text`` under ``message``) keeps its own get_json_object.
+    A memory output parses the same, with a dead-letter dir (the
+    passthrough) and without one (the good side of the split)."""
     db_path = str(tmp_path / "plan.sqlite")
     cfg = _config(spool, db_path)
     cfg["flows"][0][1]["kwargs"]["parameters"] = {
@@ -147,6 +149,20 @@ def test_flow_parses_each_message_once(spark, spool, tmp_path):
     assert rows[0] == (
         "2024-01-01T00:00:00", '{"text":"msg-0"}', "msg-0", None, None
     )
+
+    cfg["blocks"][1] = {"name": "output", "type": "memory"}
+    for dlq in (None, str(tmp_path / "dlq")):
+        (runner,) = compile_pipeline(
+            spark, PipelineSpec.from_dict(cfg), str(tmp_path / f"ckpt{bool(dlq)}"),
+            dlq,
+        )
+        (query,) = runner.start(available_now=True)
+        query.awaitTermination(120)
+        plan = query._jsq.explainInternal(False)
+        assert _json_parses(plan) == {
+            "envelope": 1, "validity": 1, "payload": 1, "path": 1
+        }, plan
+        assert spark.table(runner.name).count() == 7
 
 
 def test_sharded_flow_with_dead_letters_runs_one_query(spark, spool, tmp_path):
@@ -186,23 +202,175 @@ def test_sharded_flow_with_dead_letters_runs_one_query(spark, spool, tmp_path):
 
 
 def test_one_query_flow_config_guards(spark, spool, tmp_path):
-    """A sql flow refuses, at compile time, a dead-letter dir that
-    holds the ``_spark_metadata`` log of a separate dead-letter query
-    (Spark would read only the files that log lists) and a parameter
-    named like the reserved dead-letter column."""
-    cfg = _config(spool, str(tmp_path / "out.sqlite"))
+    """A flow refuses, at compile time, a dead-letter dir that holds
+    the ``_spark_metadata`` log of a separate dead-letter query (Spark
+    would read only the files that log lists) and a parameter named
+    like the reserved dead-letter column, whatever its output."""
+    for output in (
+        {"name": "output", "type": "sql",
+         "kwargs": {"url": f"sqlite:///{tmp_path / 'out.sqlite'}"}},
+        {"name": "output", "type": "memory"},
+    ):
+        cfg = _config(spool, str(tmp_path / "out.sqlite"))
+        cfg["blocks"][1] = output
+        dlq = tmp_path / f"dlq_{output['type']}"
+        (runner,) = compile_pipeline(
+            spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt"), str(dlq)
+        )
+        (dlq / runner.name / "_spark_metadata").mkdir(parents=True)
+        with pytest.raises(PipelineError, match="_spark_metadata"):
+            compile_pipeline(
+                spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt"), str(dlq)
+            )
+        cfg["flows"][0][1]["kwargs"]["parameters"]["_dead_letter"] = "timestamp"
+        with pytest.raises(PipelineError, match="reserved"):
+            compile_pipeline(
+                spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt")
+            )
+
+
+_DERBY = "org.apache.derby.jdbc.EmbeddedDriver"
+
+
+def _derby(spark, url, ddl=None, select=None):
+    """Run ``ddl`` on, or fetch the rows of ``select`` from, a Derby
+    database through the JVM's DriverManager."""
+    jvm = spark._jvm
+    jvm.java.lang.Class.forName(_DERBY)
+    con = jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        if ddl:
+            con.createStatement().executeUpdate(ddl)
+        if not select:
+            return None
+        rs = con.createStatement().executeQuery(select)
+        width = rs.getMetaData().getColumnCount()
+        rows = []
+        while rs.next():
+            rows.append(tuple(rs.getString(i + 1) for i in range(width)))
+        return rows
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize(
+    "output", ["sql", "sql_shards", "parquet", "parquet_shards", "memory",
+               "spool", "jdbc"],
+)
+def test_every_output_runs_one_query_with_dead_letters(
+    spark, spool, tmp_path, output
+):
+    """With a dead-letter dir, every output type is one streaming query:
+    no ``<flow>_dead`` checkpoint, the dead row is a
+    ``batch-*-part-*.parquet`` file that ``pyarrow.dataset`` and
+    ``spark.read.parquet`` both read, and no ``_dead_letter`` column or
+    JSON key reaches the good output."""
+    import glob
+
+    import pyarrow.dataset as ds
+
+    from rabbithole_spark.streaming.sinks import read_parquet_shards
+    from rabbithole_spark.streaming.sources import read_spool_batch
+
+    params = {"timestamp": "timestamp", "message": "message.text"}
+    out = str(tmp_path / "out")
+    flow_kwargs = {"parameters": params}
+    if output.startswith("sql"):
+        # positional: a leaked column would break the arity of every row
+        block = {"type": "sql", "kwargs": {"url": f"sqlite:///{out}.sqlite"}}
+        flow_kwargs["parameters"] = list(params.values())
+        flow_kwargs["query"] = "INSERT INTO logs VALUES (?, ?)"
+        flow_kwargs["setup"] = (
+            "CREATE TABLE IF NOT EXISTS logs (timestamp TEXT, message TEXT)"
+        )
+    elif output.startswith("parquet"):
+        block = {"type": "parquet", "kwargs": {"path": out}}
+    elif output == "jdbc":
+        url = f"jdbc:derby:{tmp_path}/onequerydb;create=true"
+        _derby(spark, url, 'CREATE TABLE logs (timestamp VARCHAR(64), '
+               'message VARCHAR(256), "__batch_id" BIGINT)')
+        block = {"type": "jdbc", "kwargs": {"url": url, "driver": _DERBY}}
+        flow_kwargs.update(table="logs", idempotent=True)
+    else:
+        block = {"type": output, "kwargs": {"path": out}}
+    if output.endswith("_shards"):
+        flow_kwargs["shards"] = 2
+    cfg = _config(spool, out)
+    cfg["blocks"][1] = {"name": "output", **block}
+    cfg["flows"][0][1]["kwargs"] = flow_kwargs
     dlq = tmp_path / "dlq"
     (runner,) = compile_pipeline(
         spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt"), str(dlq)
     )
-    (dlq / runner.name / "_spark_metadata").mkdir(parents=True)
-    with pytest.raises(PipelineError, match="_spark_metadata"):
-        compile_pipeline(
-            spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt"), str(dlq)
+    queries = runner.start(available_now=True)
+    assert len(queries) == 1
+    (query,) = queries
+    query.awaitTermination(120)
+    assert query.exception() is None
+    assert os.listdir(tmp_path / "ckpt") == [runner.name]
+
+    dead_dir = str(dlq / runner.name)
+    names = os.listdir(dead_dir)
+    assert names and all(
+        re.fullmatch(r"batch-\d{8}-part-\d{4}\.parquet", n) for n in names
+    ), names
+    want_dead = [("logs", "text/plain", "not json {", "undecodable body")]
+    fields = ["exchange", "content_type", "body", "dead_reason"]
+    table = ds.dataset(dead_dir, format="parquet").to_table()
+    assert sorted(table.column_names) == sorted(fields)
+    assert list(zip(*(table[f].to_pylist() for f in fields))) == want_dead
+    dead = spark.read.parquet(dead_dir).select(*fields).collect()
+    assert [tuple(r) for r in dead] == want_dead
+
+    if output == "sql":
+        con = sqlite3.connect(out + ".sqlite")
+        good = [m for (m,) in con.execute("SELECT message FROM logs")]
+        con.close()
+    elif output == "sql_shards":
+        good = [m for (m,) in _shard_rows(out + ".sqlite", "SELECT message FROM logs")]
+    elif output == "jdbc":
+        good = [m for (m,) in _derby(spark, url, select="SELECT message FROM logs")]
+    elif output == "spool":
+        bodies = [json.loads(r.body) for r in read_spool_batch(spark, out).collect()]
+        assert all(sorted(b) == ["message", "timestamp"] for b in bodies), bodies
+        good = [b["message"] for b in bodies]
+    else:
+        if output == "memory":
+            df = spark.table(runner.name)
+        elif output == "parquet":
+            df = spark.read.parquet(out)
+        else:
+            df = read_parquet_shards(spark, out)
+            assert glob.glob(out + "/__batch_id=*")
+        assert sorted(df.columns) == ["message", "timestamp"]
+        good = [r.message for r in df.collect()]
+    assert sorted(good) == [f"msg-{i}" for i in range(7)]
+
+
+def test_every_output_applies_the_time_trigger(spark, spool, tmp_path):
+    """The time half of the count-or-time policy reaches every output's
+    query, memory included."""
+    outputs = {
+        "sql": {"url": f"sqlite:///{tmp_path / 'out.sqlite'}"},
+        "parquet": {"path": str(tmp_path / "pq")},
+        "memory": {},
+        "spool": {"path": str(tmp_path / "relay")},
+    }
+    for kind, kwargs in outputs.items():
+        cfg = _config(spool, str(tmp_path / "out.sqlite"))
+        cfg["time_limit"] = 3
+        cfg["blocks"][1] = {"name": "output", "type": kind, "kwargs": kwargs}
+        if kind != "sql":
+            cfg["flows"][0][1]["kwargs"].pop("query")
+        (runner,) = compile_pipeline(
+            spark, PipelineSpec.from_dict(cfg), str(tmp_path / f"ckpt_{kind}")
         )
-    cfg["flows"][0][1]["kwargs"]["parameters"]["_dead_letter"] = "timestamp"
-    with pytest.raises(PipelineError, match="reserved"):
-        compile_pipeline(spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt"))
+        (query,) = runner.start()
+        try:
+            trigger = query._jsq.streamingQuery().trigger().toString()
+        finally:
+            query.stop()
+        assert trigger == "ProcessingTimeTrigger(3000)", (kind, trigger)
 
 
 def test_spool_envelope_rows_per_line(spark, tmp_path):
@@ -884,7 +1052,7 @@ def test_sharded_sink_matches_driver_funnel_values(spark, tmp_path):
 
 
 def _with_dead_letters(spark, n=40, every=5):
-    """A mapped batch as a sql flow hands it to its sink: the reserved
+    """A mapped batch of a flow with a dead-letter dir: the reserved
     ``_dead_letter`` struct first, set on every ``every``-th row."""
     from pyspark.sql import functions as F
 
@@ -963,6 +1131,40 @@ def test_sharded_sink_swallowed_shard_still_writes_dead_rows(spark, tmp_path):
     cb(_with_dead_letters(spark), 0)
     assert _dead_bodies(dlq) == sorted(f"bad-{i}" for i in range(0, 40, 5))
     assert _no_temp_files(dlq)
+
+
+def test_passthrough_replay_rewrites_its_dead_files(spark, tmp_path):
+    """The dead-letter passthrough hands on the good rows without the
+    dead column and writes each partition's dead rows under the batch
+    id Spark sets on the batch's tasks. Run twice on one batch with the
+    same id, it leaves the same files and rows: no duplicates, no
+    ``.`` or ``_`` names. Outside a streaming batch it refuses to run."""
+    from rabbithole_spark.streaming.sinks import dead_letter_passthrough
+
+    dlq = str(tmp_path / "dlq")
+    good = dead_letter_passthrough(_with_dead_letters(spark), dlq)
+    assert good.columns == ["id"]
+    want_dead = sorted(f"bad-{i}" for i in range(0, 40, 5))
+    sc = spark.sparkContext
+    sc.setLocalProperty("streaming.sql.batchId", "4")
+    try:
+        assert sorted(r.id for r in good.collect()) == [
+            i for i in range(40) if i % 5
+        ]
+        first = sorted(os.listdir(dlq))
+        assert first and all(
+            re.fullmatch(r"batch-00000004-part-\d{4}\.parquet", n)
+            for n in first
+        )
+        assert _dead_bodies(dlq) == want_dead
+        good.collect()  # replay of batch 4
+        assert sorted(os.listdir(dlq)) == first
+        assert _dead_bodies(dlq) == want_dead
+        assert _no_temp_files(dlq)
+    finally:
+        sc.setLocalProperty("streaming.sql.batchId", None)
+    with pytest.raises(Exception, match="streaming.sql.batchId"):
+        good.collect()
 
 
 def test_funnel_sink_splits_dead_rows_on_both_paths(spark, tmp_path):
