@@ -201,10 +201,10 @@ def _check_one_query_flow(
     flow_name: str, mapper: ParametersMapper, dead_path: str | None
 ) -> None:
     """Config errors of the one-query flow shape."""
-    if any(name == DEAD_LETTER_COL for name, _ in mapper.items or []):
+    if any(name.startswith(DEAD_LETTER_COL) for name, _ in mapper.items or []):
         raise PipelineError(
-            f"flow {flow_name!r}: parameter name {DEAD_LETTER_COL!r} is "
-            "reserved for the dead-letter column"
+            f"flow {flow_name!r}: parameter names starting with "
+            f"{DEAD_LETTER_COL!r} are reserved for the dead-letter columns"
         )
     if dead_path and os.path.isdir(os.path.join(dead_path, "_spark_metadata")):
         # Spark reads a dir holding _spark_metadata through that log

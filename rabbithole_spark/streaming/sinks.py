@@ -175,19 +175,24 @@ class DeadLetters:
 
 #: Local property Spark sets on every job of a streaming micro-batch.
 _BATCH_ID_KEY = "streaming.sql.batchId"
+#: Source partition of each row, added below the passthrough's stage.
+_SOURCE_PART_COL = "_dead_letter_part"
 
 
 def dead_letter_passthrough(df: DataFrame, dead_letter_dir: str) -> DataFrame:
     """``df`` without :data:`DEAD_LETTER_COL` and without its dead rows,
     for the outputs that do not split them off themselves.
 
-    One ``mapInArrow`` stage in the flow's own query: each task splits
-    its Arrow batches (:meth:`DeadLetters.split`) and, at the end of its
-    partition, writes the dead rows as ``batch-<id>-part-<pid>.parquet``
-    (:meth:`DeadLetters.write`). ``<id>`` is the micro-batch id Spark
-    sets on the batch's tasks, ``<pid>`` the task's partition, which
-    follows the source's partitioning. A replay overwrites its files
-    only when the source plans the batch into the same partitions.
+    One ``mapInArrow`` stage in the flow's own query: each evaluation of
+    a source partition splits its Arrow batches
+    (:meth:`DeadLetters.split`) and, at its end, writes the dead rows as
+    ``batch-<id>-part-<pid>.parquet`` (:meth:`DeadLetters.write`).
+    ``<id>`` is the micro-batch id Spark sets on the batch's tasks,
+    ``<pid>`` the source partition (``spark_partition_id()`` below the
+    stage), not the task's: a downstream coalesce (a jdbc
+    ``numPartitions``) runs several source partitions in one task, and
+    each keeps its own file. A replay overwrites its files only when the
+    source plans the batch into the same partitions.
     """
     dead_dir = os.path.abspath(dead_letter_dir)
     schema = StructType(
@@ -197,19 +202,24 @@ def dead_letter_passthrough(df: DataFrame, dead_letter_dir: str) -> DataFrame:
     def split_partition(batches):
         from pyspark import TaskContext
 
-        ctx = TaskContext.get()
-        batch_id = ctx.getLocalProperty(_BATCH_ID_KEY)
+        batch_id = TaskContext.get().getLocalProperty(_BATCH_ID_KEY)
         if batch_id is None:
             raise RuntimeError(
                 "dead-letter passthrough outside a streaming batch: "
                 f"no {_BATCH_ID_KEY} to name the dead-letter files by"
             )
         dead = DeadLetters(dead_dir)
+        part = None
         for rb in batches:
-            yield dead.split(rb)
-        dead.write(int(batch_id), ctx.partitionId())
+            if part is None and rb.num_rows:
+                part = rb.column(_SOURCE_PART_COL)[0].as_py()
+            yield dead.split(rb.drop_columns([_SOURCE_PART_COL]))
+        if part is not None:
+            dead.write(int(batch_id), part)
 
-    return df.mapInArrow(split_partition, schema)
+    return df.withColumn(_SOURCE_PART_COL, F.spark_partition_id()).mapInArrow(
+        split_partition, schema
+    )
 
 
 def _batch_params(

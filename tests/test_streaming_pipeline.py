@@ -205,7 +205,7 @@ def test_one_query_flow_config_guards(spark, spool, tmp_path):
     """A flow refuses, at compile time, a dead-letter dir that holds
     the ``_spark_metadata`` log of a separate dead-letter query (Spark
     would read only the files that log lists) and a parameter named
-    like the reserved dead-letter column, whatever its output."""
+    like the reserved dead-letter columns, whatever its output."""
     for output in (
         {"name": "output", "type": "sql",
          "kwargs": {"url": f"sqlite:///{tmp_path / 'out.sqlite'}"}},
@@ -222,11 +222,14 @@ def test_one_query_flow_config_guards(spark, spool, tmp_path):
             compile_pipeline(
                 spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt"), str(dlq)
             )
-        cfg["flows"][0][1]["kwargs"]["parameters"]["_dead_letter"] = "timestamp"
-        with pytest.raises(PipelineError, match="reserved"):
-            compile_pipeline(
-                spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt")
-            )
+        params = cfg["flows"][0][1]["kwargs"]["parameters"]
+        for reserved in ("_dead_letter", "_dead_letter_part"):
+            params[reserved] = "timestamp"
+            with pytest.raises(PipelineError, match="reserved"):
+                compile_pipeline(
+                    spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt")
+                )
+            del params[reserved]
 
 
 _DERBY = "org.apache.derby.jdbc.EmbeddedDriver"
@@ -345,6 +348,50 @@ def test_every_output_runs_one_query_with_dead_letters(
         assert sorted(df.columns) == ["message", "timestamp"]
         good = [r.message for r in df.collect()]
     assert sorted(good) == [f"msg-{i}" for i in range(7)]
+
+
+def test_coalesced_jdbc_output_keeps_every_dead_row(spark, tmp_path):
+    """A jdbc output whose ``numPartitions`` is below the source's
+    partition count coalesces the batch, so one task evaluates several
+    source partitions in turn. Each of them keeps its own dead-letter
+    file: no source partition's dead rows overwrite another's."""
+    spool_dir = str(tmp_path / "spool")
+    for f in range(3):
+        good = [
+            {"exchange": "logs", "content_type": "application/json",
+             "body": json.dumps({"timestamp": f"2024-01-01T00:0{f}:{i:02d}",
+                                  "message": {"text": f"msg-{f}-{i}"}})}
+            for i in range(3)
+        ]
+        bad = {"exchange": "logs", "content_type": "text/plain",
+               "body": f"not json {f}"}
+        write_spool_messages(spool_dir, good + [bad], f"batch{f}.jsonl")
+    url = f"jdbc:derby:{tmp_path}/coalescedb;create=true"
+    _derby(spark, url, "CREATE TABLE logs (ts VARCHAR(64), msg VARCHAR(256))")
+    cfg = _config(spool_dir, str(tmp_path / "unused.sqlite"))
+    cfg["size_limit"] = 100
+    cfg["blocks"][1] = {"name": "output", "type": "jdbc",
+                        "kwargs": {"url": url, "driver": _DERBY}}
+    cfg["flows"][0][1]["kwargs"] = {
+        "table": "logs",
+        "numPartitions": 1,
+        "parameters": {"ts": "timestamp", "msg": "message.text"},
+    }
+    dlq = tmp_path / "dlq"
+    (runner,) = compile_pipeline(
+        spark, PipelineSpec.from_dict(cfg), str(tmp_path / "ckpt"), str(dlq)
+    )
+    (query,) = runner.start(available_now=True)
+    query.awaitTermination(120)
+    assert query.exception() is None
+
+    good = _derby(spark, url, select="SELECT msg FROM logs")
+    assert sorted(m for (m,) in good) == sorted(
+        f"msg-{f}-{i}" for f in range(3) for i in range(3)
+    )
+    dead_dir = str(dlq / runner.name)
+    assert len(os.listdir(dead_dir)) == 3, os.listdir(dead_dir)
+    assert _dead_bodies(dead_dir) == [f"not json {f}" for f in range(3)]
 
 
 def test_every_output_applies_the_time_trigger(spark, spool, tmp_path):
