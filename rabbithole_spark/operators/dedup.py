@@ -751,16 +751,17 @@ def prefix_filtered_jaccard_pairs(
     if plan_size_bytes(df) <= broadcast_cap(df):
         verify_src = df
     else:
-        # broadcast-semi-join the (tiny) candidate id set BEFORE the
-        # shingle projection, so the re-shingle cost is O(candidates),
-        # not two more corpus passes (lesson 6)
+        # semi-join the candidate id set BEFORE the shingle projection,
+        # so the re-shingle cost is O(candidates), not two more corpus
+        # passes (lesson 6). Over the cap the id set is corpus-bounded
+        # too, so its broadcast is size-guarded like the verify sides.
         cand_ids = (
             cand.select(F.col("id_a").alias("cid"))
             .union(cand.select(F.col("id_b").alias("cid")))
             .distinct()
         )
         verify_src = df.join(
-            F.broadcast(cand_ids), F.col(id_col) == F.col("cid"), "inner"
+            guarded_broadcast(cand_ids), F.col(id_col) == F.col("cid"), "inner"
         )
     # one shingle pass over the verify source, checkpointed so BOTH
     # verify sides read the same materialization instead of re-running

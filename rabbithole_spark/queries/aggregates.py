@@ -80,8 +80,8 @@ GROUP BY ROLLUP (r_name, n_name)
 )
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = table(spark, sf_dir, "customer")
-    nation = F.broadcast(table(spark, sf_dir, "nation"))
-    region = F.broadcast(table(spark, sf_dir, "region"))
+    nation = table(spark, sf_dir, "nation")
+    region = table(spark, sf_dir, "region")
     return (
         customer.join(nation, customer.c_nationkey == nation.n_nationkey)
         .join(region, nation.n_regionkey == region.r_regionkey)

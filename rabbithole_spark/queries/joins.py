@@ -18,7 +18,7 @@ from rabbithole_spark.operators.skew import salted_join
 from rabbithole_spark.session import table
 
 
-# --- inner equi-join + broadcast dims --------------------------------------
+# --- inner equi-join fact -> dims -------------------------------------------
 
 _ENRICHED_ORACLE = """
 SELECT o_orderkey, c_name, n_name, r_name, o_totalprice
@@ -33,13 +33,13 @@ WHERE o_orderstatus = 'F'
 @register(
     "join_inner_enriched_orders",
     oracle=_ENRICHED_ORACLE,
-    doc="Inner equi-join chain fact->dim->dim->dim with broadcast dims.",
+    doc="Inner equi-join chain fact->dim->dim->dim, dims broadcast by size.",
 )
 def join_inner_enriched_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     customer = table(spark, sf_dir, "customer")
-    nation = F.broadcast(table(spark, sf_dir, "nation"))
-    region = F.broadcast(table(spark, sf_dir, "region"))
+    nation = table(spark, sf_dir, "nation")
+    region = table(spark, sf_dir, "region")
     return (
         orders.join(customer, orders.o_custkey == customer.c_custkey)
         .join(nation, customer.c_nationkey == nation.n_nationkey)
@@ -81,8 +81,8 @@ def join_multiway_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lineitem = table(spark, sf_dir, "lineitem")
     supplier = table(spark, sf_dir, "supplier")
-    nation = F.broadcast(table(spark, sf_dir, "nation"))
-    region = F.broadcast(table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA"))
+    nation = table(spark, sf_dir, "nation")
+    region = table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         customer.join(orders, customer.c_custkey == orders.o_custkey)
         .join(lineitem, orders.o_orderkey == lineitem.l_orderkey)

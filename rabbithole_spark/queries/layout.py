@@ -74,7 +74,7 @@ def layout_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.max("l_partkey") + 1).alias("mp"),
         (F.max("l_orderkey") + 1).alias("mo"),
     )
-    zed = li.crossJoin(F.broadcast(bounds)).select(
+    zed = li.crossJoin(bounds).select(
         "l_partkey",
         "l_orderkey",
         zorder_key(

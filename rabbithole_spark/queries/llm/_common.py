@@ -142,8 +142,8 @@ def _bm25_scores(
     ).filter(F.col("tf") > 0)
     dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
     scored = (
-        tf.join(F.broadcast(dfreq), "word")  # dl rides along in tf
-        .crossJoin(F.broadcast(stats))
+        tf.join(dfreq, "word")  # dl rides along in tf
+        .crossJoin(stats)
         .withColumn(
             "idf",
             F.log(

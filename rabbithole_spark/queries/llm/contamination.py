@@ -252,7 +252,7 @@ def contamination_semantic_screen_bcast(
     best = F.array_max(cand)
     return (
         e.filter(F.col("vec_id") >= _SEMCON_N_BENCH)
-        .join(F.broadcast(bench))
+        .join(bench)
         .select(
             "vec_id",
             "label",
@@ -365,23 +365,23 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(table(spark, sf_dir, "documents"))
     # benchmark side: the held-out source is selected AT THE SCAN
     # (predicate pushdown) before any shingling, and its distinct
-    # shingle set is small -> broadcast
+    # shingle set is small, so the planner broadcasts it by size
     bench = (
         d.filter((F.col("source") == "src0") & F.col("text").isNotNull())
         .select(F.explode_outer(word_shingles(F.col("text"), 3)).alias("sh"))
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
-    # corpus side: ONE shingling pass; overlap is a broadcast left-join
-    # marker folded into the same per-doc aggregation as the total, so
-    # the corpus is never scanned or exploded twice
+    # corpus side: ONE shingling pass; overlap is a left-join marker
+    # folded into the same per-doc aggregation as the total, so the
+    # corpus is never scanned or exploded twice
     corpus = d.filter(
         (F.col("source") != "src0") & F.col("text").isNotNull()
     ).select(
         "doc_id", F.explode_outer(word_shingles(F.col("text"), 3)).alias("sh")
     )
     return (
-        corpus.join(F.broadcast(bench), "sh", "left")
+        corpus.join(bench, "sh", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),

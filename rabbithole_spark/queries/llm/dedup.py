@@ -960,11 +960,12 @@ WHERE {jac} >= {_INGEST_TAU}
     doc="Incremental near-dup screening of an ingest batch against the "
     "existing corpus (batch = doc_id % 10 == 0, the stand-in for "
     "'today's crawl'): MinHash signatures on both sides, then the "
-    "BATCH band relation — small by construction — broadcasts "
-    "against the corpus bands, so the corpus never shuffles on the "
-    "bucket key; candidates are verified by exact Jaccard recomputed "
-    "only for matched docs via broadcast semi-joins. At 100 TB the "
-    "corpus signatures/bands would be a persisted incremental index "
+    "BATCH band relation — small by construction, so the planner "
+    "broadcasts it by size — joins the corpus bands, so the corpus "
+    "never shuffles on the bucket key; candidates are verified by "
+    "exact Jaccard recomputed only for matched docs via broadcast "
+    "semi-joins. At 100 TB the corpus signatures/bands would be a "
+    "persisted incremental index "
     "(one-time cost, appended per batch) and this query is the "
     "per-batch probe; the digest-exact streaming twin is "
     "stream_ingest_dedup_against_corpus. Oracle: full xxhash64 "
@@ -1000,10 +1001,8 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         bands(corpus)
         .join(
-            F.broadcast(
-                bands(batch).select(
-                    F.col("doc_id").alias("batch_id"), "band", "band_hash"
-                )
+            bands(batch).select(
+                F.col("doc_id").alias("batch_id"), "band", "band_hash"
             ),
             ["band", "band_hash"],
         )

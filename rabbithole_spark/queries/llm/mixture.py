@@ -268,7 +268,7 @@ def mixture_resample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     counts = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_lang"))
     total = d.agg(F.count(F.lit(1)).alias("n_total"))
-    rates = counts.crossJoin(F.broadcast(total)).select(
+    rates = counts.crossJoin(total).select(
         "lang",
         "n_lang",
         F.least(F.lit(1.0), 0.2 * F.col("n_total") / F.col("n_lang")).alias(
@@ -660,7 +660,7 @@ def mixture_js_divergence_by_source(
         F.sum("n_docs").alias("n_corpus"),
         *[F.sum(f"n_{lang}").alias(f"c_{lang}") for lang in _JS_LANGS],
     )
-    joined = per_source.crossJoin(F.broadcast(corpus))
+    joined = per_source.crossJoin(corpus)
 
     ln2 = F.log(F.lit(2.0))
     p_sum, q_sum = None, None
@@ -843,9 +843,7 @@ def mixture_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
             DecimalType(15, 12)
         )
     )
-    deltas = lm.crossJoin(F.broadcast(tot)).select(
-        "bucket", delta.alias("d")
-    )
+    deltas = lm.crossJoin(tot).select("bucket", delta.alias("d"))
     scored = (
         dcounts.filter(F.col("split") != 0)
         .join(F.broadcast(deltas), "bucket")

@@ -146,7 +146,7 @@ def pipeline_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     filtered = (
-        scored.join(F.broadcast(kept_sources), "source")
+        scored.join(kept_sources, "source")
         .join(nonrep, "doc_id")
         .filter(F.col("quality") >= 0.7)
         .select("doc_id", "lang", "fp")
@@ -273,7 +273,7 @@ def diagnostic_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bottleneck this diagnostic exists to find (round-9 review);
     # ranks 1..10 over the same total order are identical either way
     return (
-        per_key.crossJoin(F.broadcast(tot))
+        per_key.crossJoin(tot)
         .select(
             "join_key",
             "n_rows",
@@ -369,7 +369,7 @@ def timeseries_user_profile_outliers(
         ng = tg if ng is None else (ng + tg)
     cos = dot / (F.sqrt(nb) * F.sqrt(ng))
     return (
-        per_user.crossJoin(F.broadcast(corpus))
+        per_user.crossJoin(corpus)
         .select(
             "user_id",
             "n_events",
@@ -443,7 +443,7 @@ def cohort_weekly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes = cells.filter(F.col("weeks_since") == 0).select(
         "cohort_week", F.col("n_active").alias("cohort_size")
     )
-    return cells.join(F.broadcast(sizes), "cohort_week").select(
+    return cells.join(sizes, "cohort_week").select(
         "cohort_week",
         "weeks_since",
         "n_active",

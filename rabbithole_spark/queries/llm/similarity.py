@@ -1148,7 +1148,7 @@ def similarity_hard_negatives_bcast(
         ),
     )
     scored = (
-        e.join(F.broadcast(anchors))
+        e.join(anchors)
         .select(
             "vec_id",
             "label",

@@ -481,7 +481,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ndocs = d.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
         tf.join(dfreq, "word")
-        .crossJoin(F.broadcast(ndocs))
+        .crossJoin(ndocs)
         .withColumn(
             "tfidf",
             F.round(
@@ -710,7 +710,7 @@ def text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("w2", F.split("bigram", " ").getItem(1))
         .join(u1, "w1")
         .join(u2, "w2")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select("bigram", "c12", F.round(pmi, 6).alias("pmi"))
         .orderBy(F.col("pmi").desc(), "bigram")
         .limit(20)
@@ -805,7 +805,7 @@ def _lm_xent_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast(DecimalType(15, 12))
     terms = (
         tf.join(cnt, "word")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select("doc_id", "tf", lp.alias("lp"))
     )
     xent = (
@@ -1076,7 +1076,7 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "coverage_target double",
     )
     return (
-        ranked.crossJoin(F.broadcast(tot))
+        ranked.crossJoin(tot)
         .join(
             F.broadcast(targets),
             F.col("cum") >= F.col("coverage_target") * F.col("total"),
@@ -1120,9 +1120,9 @@ GROUP BY doc_id
     "is localCheckpointed and shared by the count and scoring "
     "branches; the word count is one partial-aggregated shuffle; the "
     "1000-row vocab comes back via TakeOrderedAndProject and joins as "
-    "a BROADCAST left join (the corpus-side relation never "
-    "re-shuffles on the word key, so a mega-hot token costs nothing "
-    "extra); the per-doc rollup is the one remaining doc_id exchange.",
+    "a left join the planner broadcasts by size (the corpus-side "
+    "relation never re-shuffles on the word key, so a mega-hot token "
+    "costs nothing extra); the per-doc rollup is the one remaining doc_id exchange.",
 )
 def text_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
@@ -1138,7 +1138,7 @@ def text_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("w", F.lit(1).alias("in_vocab"))
     )
     return (
-        toks.join(F.broadcast(vocab), "w", "left")
+        toks.join(vocab, "w", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),

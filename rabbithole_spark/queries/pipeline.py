@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -140,6 +141,26 @@ def _replay_state_partitions(spark, sf_dir: str) -> int:
     return max(min(floor, cap), min(cap, (nbytes >> 24) + 1))
 
 
+def _await_tasks_ended(spark, q) -> None:
+    """Wait (at most 30 s) until no task of the stopped query
+    ``q`` still runs. ``stop()`` cancels the query's job group (its run
+    id) and returns before the cancelled tasks end, so a state-store
+    task can still write ``state/<op>/<p>/..N.delta.*.tmp.crc`` and
+    re-create a checkpoint directory removed right after the stop."""
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.monotonic() + 30.0
+
+    def running(job) -> bool:
+        stages = map(tracker.getStageInfo, job.stageIds)
+        return job.status == "RUNNING" or any(s and s.numActiveTasks for s in stages)
+
+    jobs = tracker.getJobIdsForGroup(str(q.runId))  # stopped: no new ones
+    while time.monotonic() < deadline and any(
+        running(job) for job in map(tracker.getJobInfo, jobs) if job
+    ):
+        time.sleep(0.05)
+
+
 def _memory_sinktable(spark, df, prefix: str, mode: str, sf_dir: str,
                        wait=lambda q: q.awaitTermination(300.0)):
     """Run a bounded (AvailableNow) stream into a memory sink and
@@ -177,6 +198,7 @@ def _memory_sinktable(spark, df, prefix: str, mode: str, sf_dir: str,
         if q.isActive:
             q.stop()
         if ckpt:
+            _await_tasks_ended(spark, q)
             shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
@@ -823,9 +845,10 @@ WHERE d.source <> 'src0'
     "documents (source <> src0) stream through a stream-static LEFT "
     "ANTI join on the content digest vs the already-ingested corpus "
     "(src0) — the crawl-ingest gate of dedup_incremental_new_docs as "
-    "a continuous pipeline stage. The static digest set broadcasts "
-    "(32-byte keys only; at 100 TB swap in a Bloom-filter pre-pass or "
-    "a shuffled anti join, same plan surgery as the batch twin), the "
+    "a continuous pipeline stage. The planner broadcasts the static "
+    "digest set by size (32-byte keys only; at 100 TB swap in a "
+    "Bloom-filter pre-pass or a shuffled anti join, same plan surgery "
+    "as the batch twin), the "
     "stream side never re-shuffles, and append mode needs no state: "
     "each admitted doc emits exactly once. In-batch duplicates pass "
     "intentionally — within-stream dedup is stream_dedup_watermark's "
@@ -853,9 +876,9 @@ def stream_ingest_dedup_against_corpus(
         .filter(F.col("source") != "src0")
         .withColumn("content_hash", sha)
     )
-    admitted = incoming.join(
-        F.broadcast(corpus), "content_hash", "left_anti"
-    ).select("doc_id", "lang")
+    admitted = incoming.join(corpus, "content_hash", "left_anti").select(
+        "doc_id", "lang"
+    )
     return _memory_sinktable(spark, admitted, "stream_ingdedup", "append", sf_dir=sf_dir)
 
 
@@ -863,9 +886,9 @@ def stream_ingest_dedup_against_corpus(
     "stream_static_enrich",
     oracle=_ENRICH_ORACLE,
     doc="Stream-static join: the events stream enriched against the "
-    "static customer dimension (broadcast — the static side never "
-    "re-shuffles per micro-batch, Spark re-reads only changed files), "
-    "then a watermarked per-nation revenue rollup. The standard "
+    "static customer dimension (broadcast by size — the static side "
+    "never re-shuffles per micro-batch, Spark re-reads only changed "
+    "files), then a watermarked per-nation revenue rollup. The standard "
     "dimension-enrichment shape for streaming ETL at scale; the "
     "static side stays a broadcast even on a 1000-executor cluster "
     "as long as the dimension fits the broadcast threshold. Complete "
@@ -880,7 +903,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = (
         _read_events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
-        .join(F.broadcast(customers), "user_id")
+        .join(customers, "user_id")
         .groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

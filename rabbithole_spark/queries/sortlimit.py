@@ -193,7 +193,7 @@ GROUP BY n_name
 )
 def subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = table(spark, sf_dir, "customer")
-    nation = F.broadcast(table(spark, sf_dir, "nation"))
+    nation = table(spark, sf_dir, "nation")
     urgent = (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")

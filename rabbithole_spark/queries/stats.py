@@ -493,7 +493,7 @@ def stats_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # outlier count — without the cut, Spark re-derives the median
     # subtree (a whole extra corpus pass) under the second consumer
     dev = (
-        d.join(F.broadcast(med), "lang")
+        d.join(med, "lang")
         .select(
             "lang",
             F.abs(F.col("n_chars") - F.col("med")).alias("adev"),
@@ -506,7 +506,7 @@ def stats_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     is_out = F.col("adev") > F.lit(_MAD_K) * F.col("mad")
     return (
-        dev.join(F.broadcast(mad), "lang")
+        dev.join(mad, "lang")
         .groupBy("lang", "med", "mad")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

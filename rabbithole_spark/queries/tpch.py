@@ -102,7 +102,7 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag") == "R"
     )
-    nation = F.broadcast(table(spark, sf_dir, "nation"))
+    nation = table(spark, sf_dir, "nation")
     return (
         customer.join(orders, customer.c_custkey == orders.o_custkey)
         .join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
@@ -270,7 +270,7 @@ GROUP BY 1
     "tpch_q14_promo_share",
     oracle=_Q14_ORACLE,
     doc="TPC-H Q14 shape: promo revenue share per ship month — "
-    "broadcast part dim join (fact never shuffles for it), "
+    "part dim join, broadcast by size (fact never shuffles for it), "
     "conditional decimal-exact sums, ratio-of-sums in double. The "
     "conditional-aggregation-over-join pattern; plan at scale: "
     "pushed date range, one month-key exchange.",
@@ -280,7 +280,7 @@ def tpch_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.to_timestamp(F.lit("1996-01-01")))
         & (F.col("l_shipdate") < F.to_timestamp(F.lit("1997-01-01")))
     )
-    part = F.broadcast(table(spark, sf_dir, "part"))
+    part = table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
     out = (
@@ -350,7 +350,7 @@ def tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cust = (
         table(spark, sf_dir, "customer")
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
+        .join(n2, F.col("c_nationkey") == F.col("c_nk"))
         .select("c_custkey", "cust_nation")
     )
     li = (
@@ -455,8 +455,7 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(
             F.broadcast(
                 nation.join(
-                    F.broadcast(region),
-                    nation.n_regionkey == region.r_regionkey,
+                    region, nation.n_regionkey == region.r_regionkey
                 ).select(F.col("n_nationkey").alias("c_nk"))
             ),
             F.col("c_nationkey") == F.col("c_nk"),
@@ -468,7 +467,7 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = (
         table(spark, sf_dir, "lineitem")
-        .join(F.broadcast(part_sel), F.col("l_partkey") == F.col("p_partkey"))
+        .join(part_sel, F.col("l_partkey") == F.col("p_partkey"))
         .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
     )
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -583,9 +582,9 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
-    top = rev.join(
-        F.broadcast(mx), F.col("total_revenue") == F.col("mx")
-    ).select("supplier_no", "total_revenue")
+    top = rev.join(mx, F.col("total_revenue") == F.col("mx")).select(
+        "supplier_no", "total_revenue"
+    )
     return (
         table(spark, sf_dir, "supplier")
         .join(F.broadcast(top), F.col("s_suppkey") == F.col("supplier_no"))
@@ -625,7 +624,7 @@ def tpch_q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p_partkey")
     )
     sel = table(spark, sf_dir, "lineitem").join(
-        F.broadcast(part_sel), F.col("l_partkey") == F.col("p_partkey")
+        part_sel, F.col("l_partkey") == F.col("p_partkey")
     )
     w = Window.partitionBy("l_partkey")
     flt = sel.withColumn("avg_qty", F.avg("l_quantity").over(w)).filter(
@@ -693,7 +692,7 @@ def tpch_q19_disjunctive_pushdown(
         F.col("l_quantity").between(qlo_all, qhi_all)
     )
     return (
-        li.join(F.broadcast(part_sel), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(part_sel, F.col("l_partkey") == F.col("p_partkey"))
         .filter(full_pred)
         .agg(
             dsum(
@@ -772,9 +771,7 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "late_supp"
         ),
     )
-    supplier = F.broadcast(
-        table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    )
+    supplier = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         per_order.filter((F.col("n_supp") >= 2) & (F.col("n_late") == 1))
         .join(supplier, F.col("late_supp") == F.col("s_suppkey"))
@@ -836,11 +833,9 @@ def tpch_q22_global_sales_opportunity(
         .filter(F.col("o_orderdate") >= F.to_timestamp(F.lit("2000-01-01")))
         .select("o_custkey")
     )
-    nation = F.broadcast(
-        table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    )
+    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
-        customer.crossJoin(F.broadcast(ab))
+        customer.crossJoin(ab)
         .filter(F.col("c_acctbal") > F.col("ab"))
         .join(recent, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
         .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))

@@ -66,12 +66,12 @@ def _ps(
     part_keys: DataFrame | None = None,
     supp_keys: DataFrame | None = None,
 ) -> DataFrame:
-    """Spark twin of :data:`_PS_SQL`. ``part_keys`` (a broadcast
+    """Spark twin of :data:`_PS_SQL`. ``part_keys`` (a small
     p_partkey relation) LEFT-SEMI-prunes the lineitem scan BEFORE the
     (partkey, suppkey) aggregation — when the consumer only needs ps
     rows for a selective part subset (Q9's widgets), deriving then
     discarding the rest would shuffle ~20x more rows than necessary
-    (round-9 review). ``supp_keys`` (a broadcast s_suppkey relation)
+    (round-9 review). ``supp_keys`` (a small s_suppkey relation)
     does the same on the supplier key (Q11's Europe scope; round 12).
     Semantics-preserving: the group key contains both l_partkey and
     l_suppkey, so pruning input rows by either prunes whole groups —
@@ -119,11 +119,7 @@ def _supp_dim(
     )
     if region is not None:
         supp = supp.join(
-            F.broadcast(
-                table(spark, sf_dir, "region").filter(
-                    F.col("r_name") == region
-                )
-            ),
+            table(spark, sf_dir, "region").filter(F.col("r_name") == region),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
     return supp.select(*cols)
@@ -189,8 +185,8 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same device Q9 already used). Group key contains l_partkey, so
     # surviving groups are byte-identical.
     eligible = (
-        _ps(spark, sf_dir, part_keys=F.broadcast(part.select("p_partkey")))
-        .join(F.broadcast(part), F.col("ps_partkey") == F.col("p_partkey"))
+        _ps(spark, sf_dir, part_keys=part.select("p_partkey"))
+        .join(part, F.col("ps_partkey") == F.col("p_partkey"))
         .join(F.broadcast(supp), F.col("ps_suppkey") == F.col("s_suppkey"))
     )
     w = Window.partitionBy("ps_partkey")
@@ -247,7 +243,7 @@ GROUP BY n_name, o_year
 )
 def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
-    part = F.broadcast(
+    part = (
         table(spark, sf_dir, "part")
         .filter(F.col("p_name").contains("widget"))
         .select("p_partkey")
@@ -256,7 +252,7 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderdate"
     )
     supp = F.broadcast(_supp_dim(spark, sf_dir, ("s_suppkey", "n_name")))
-    # the selective widget broadcast prunes BOTH fact sides BEFORE the
+    # the selective widget filter prunes BOTH fact sides BEFORE the
     # heavy (partkey, suppkey) join — Spark does not reorder inner
     # joins by default, and the old shape ran the full li x ps join
     # first, processing ~20x more rows than the ~5%-selective part
@@ -361,7 +357,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.col("ps_partkey")).alias("np"),
     )
     return (
-        per_part.crossJoin(F.broadcast(total))
+        per_part.crossJoin(total)
         .filter(
             F.col("part_value") > F.lit(_Q11_MULT) * F.col("tv") / F.col("np")
         )
@@ -472,13 +468,9 @@ def tpch_q16_supplier_part_counts(
     # size list keeps ~1/7 of parts; guide §3.2, round 12) — same
     # group-key argument as Q2/Q9: surviving groups are unchanged.
     return (
-        _ps(spark, sf_dir, part_keys=F.broadcast(part.select("p_partkey")))
-        .join(F.broadcast(part), F.col("p_partkey") == F.col("ps_partkey"))
-        .join(
-            F.broadcast(bad_supp),
-            F.col("ps_suppkey") == F.col("s_suppkey"),
-            "left_anti",
-        )
+        _ps(spark, sf_dir, part_keys=part.select("p_partkey"))
+        .join(part, F.col("p_partkey") == F.col("ps_partkey"))
+        .join(bad_supp, F.col("ps_suppkey") == F.col("s_suppkey"), "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.count_distinct(F.col("ps_suppkey")).alias("supplier_cnt"))
     )
@@ -546,20 +538,19 @@ def tpch_q20_excess_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SUM/MIN aggregates are unchanged. Previously both aggregates ran
     # over the full fact table and discarded ~95% of their groups at
     # the joins below.
-    small_b = F.broadcast(small_parts)
     supp_keys = F.broadcast(sd.select("s_suppkey"))
     q97 = (
         li.filter(
             (F.col("l_shipdate") >= F.to_timestamp(F.lit("1997-01-01")))
             & (F.col("l_shipdate") < F.to_timestamp(F.lit("1998-01-01")))
         )
-        .join(small_b, F.col("p_partkey") == F.col("l_partkey"), "left_semi")
+        .join(small_parts, F.col("p_partkey") == F.col("l_partkey"), "left_semi")
         .join(supp_keys, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.sum("l_quantity").alias("qty97"))
     )
     cand = (
-        _ps(spark, sf_dir, part_keys=small_b, supp_keys=supp_keys)
+        _ps(spark, sf_dir, part_keys=small_parts, supp_keys=supp_keys)
         .join(
             q97,
             (F.col("l_partkey") == F.col("ps_partkey"))

@@ -129,3 +129,29 @@ def test_every_registering_module_is_listed():
         if mod not in catalog._QUERY_MODULES:
             unlisted.append(mod)
     assert unlisted == [], f"query modules missing from _QUERY_MODULES: {unlisted}"
+
+
+#: Lines under ``rabbithole_spark/`` holding an explicit ``F.broadcast(``
+#: hint. Catalyst broadcasts a relation under
+#: ``spark.sql.autoBroadcastJoinThreshold`` by its own size estimate and
+#: AQE re-checks that at run time, so a hint only pays where the plan
+#: differs without it.
+BROADCAST_HINT_LINES = 31
+
+
+def test_broadcast_hint_count_ratchet():
+    """Ratchet on hand-placed broadcast hints, like ``SHUFFLE_BUDGETS``.
+
+    Lower the pin when a hint goes. Raise it only together with a plan
+    showing that the new hint pays: the query's physical plan (or that
+    of a frame it checkpoints or collects) differs without it."""
+    pkg = os.path.join(REPO, "rabbithole_spark")
+    n = 0
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            n += sum("F.broadcast(" in line for line in f)
+    assert n <= BROADCAST_HINT_LINES, (
+        f"{n} lines with F.broadcast( under rabbithole_spark/, pinned at "
+        f"{BROADCAST_HINT_LINES}: show that the new hint changes a plan, "
+        "or let the planner choose"
+    )

@@ -888,7 +888,7 @@ def test_sharded_parquet_sink_under_local_cluster(tmp_path):
     assert 1 < got["parts"] <= 4, got  # actually sharded across tasks
 
 
-def test_guarded_broadcasts_fall_back_over_cap(spark):
+def test_guarded_broadcasts_fall_back_over_cap(spark, monkeypatch):
     """The size-guarded operator broadcasts (round 13, sizing.py):
     with the cap forced to 1 byte the qgram join and the Jaccard
     verify must plan WITHOUT the explicit broadcast build (shuffle
@@ -925,5 +925,24 @@ def test_guarded_broadcasts_fall_back_over_cap(spark):
         assert "pmod" not in ed_plan
         assert rows(ed_q) == ed_small
         assert rows(jac_q) == jac_small
+        # over the cap with auto-broadcast off, no Jaccard relation is
+        # broadcast, the candidate ids of the pruned verify source
+        # included: read the plans of the checkpointed frames too, as
+        # the verify source sits behind a localCheckpoint
+        checkpointed = []
+        real_checkpoint = type(d).localCheckpoint
+
+        def spy(df, *args, **kwargs):
+            checkpointed.append(_plan(df))
+            return real_checkpoint(df, *args, **kwargs)
+
+        monkeypatch.setattr(type(d), "localCheckpoint", spy)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        jac_q = prefix_filtered_jaccard_pairs(d, "doc_id", "text", 3, 1, 5)
+        plans = checkpointed + [_plan(jac_q)]
+        assert checkpointed
+        assert not [p for p in plans if "BroadcastExchange" in p]
+        assert rows(jac_q) == jac_small
     finally:
         spark.conf.unset("rabbithole.broadcast.cap")
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

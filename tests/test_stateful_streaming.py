@@ -4,6 +4,8 @@ across micro-batches."""
 
 from __future__ import annotations
 
+import os
+import time
 import uuid
 
 import pytest
@@ -228,6 +230,34 @@ def test_batcher_drain_timeout_raises_and_stops_query(spark, monkeypatch):
         q for q in spark.streams.active
         if (q.name or "").startswith("stream_batcher_")
     ]
+
+
+def test_bounded_replays_leave_no_checkpoint(spark):
+    """A stopped bounded replay removes its tmpfs checkpoint only after
+    the query's tasks have ended. The batcher is stopped while its
+    timer batches run back to back; a state-store task still writing a
+    delta's ``.crc`` after the ``rmtree`` used to re-create the
+    directory and leave an ``rh_replay_ckpt_*`` entry behind."""
+    from rabbithole_spark.queries import pipeline
+
+    probe = pipeline._replay_ckpt_dir()
+    if probe is None:
+        pytest.skip("no usable tmpfs: replays use Spark's temp checkpoint")
+    os.rmdir(probe)
+    shm = os.path.dirname(probe)
+
+    def ckpts() -> set[str]:
+        return {n for n in os.listdir(shm) if n.startswith("rh_replay_ckpt_")}
+
+    before = ckpts()
+    for _ in range(6):
+        pipeline.stream_count_or_time_sizes(spark, SF).collect()
+    # let any straggling task end before looking (bounded)
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.monotonic() + 30
+    while tracker.getActiveStageIds() and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert ckpts() - before == set()
 
 
 def test_stream_stream_join_matches_batch_twin(spark):
