@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rabbithole_spark.operators.text_analysis import tokens, word_windows
+
 __all__ = [
     "simhash_hamming_pairs",
     "exact_dedup",
@@ -254,15 +256,8 @@ def exact_dedup(
 
 def word_shingles(text: Column, k: int = 3) -> Column:
     """Distinct k-word shingles of a text column, built JVM-side:
-    split -> sliding windows via transform(sequence(...)) -> distinct."""
-    # explicit class == RE2 \s (the oracles' dialect); Java \s would
-    # add \x0b and diverge cross-engine on vertical-tab input
-    words = F.split(F.trim(text), r"[ \t\n\r\f]+")
-    n = F.size(words)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, k)))
-    )
+    tokens -> word_windows -> distinct."""
+    return F.array_distinct(word_windows(tokens(text), k))
 
 
 #: Universal-hash modulus (2^31 - 1, Mersenne prime): a*h+b stays under

@@ -13,19 +13,10 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: Whitespace-run pattern for winnowing canonicalization. EXPLICIT
-#: class, not \s: Python \s is Unicode-aware and includes \v, RE2
-#: (the DuckDB oracle) \s is ASCII [ \t\n\f\r], Java \s adds \x0b —
-#: three different sets, so \s would diverge on any text containing a
-#: vertical tab or a Unicode space. The explicit class below means the
-#: kernel and the oracle agree for ARBITRARY input (pinned by the
-#: differential hypothesis test), with Unicode case-folding exotica
-#: (lower() on e.g. 'İ') the only remaining documented boundary.
-_WS_RUN = re.compile(r"[ \t\n\r\f]+")
-
 __all__ = [
     "tokens",
     "token_count",
+    "word_windows",
     "bpe_ish_token_count",
     "punct_ratio",
     "stopword_ratio",
@@ -49,10 +40,19 @@ STOPWORDS: dict[str, list[str]] = {
 
 #: THE whitespace class (explicit, not \s: Java \s adds \x0b over
 #: RE2's [ \t\n\f\r], so DuckDB '\s+' oracles would diverge on a
-#: vertical tab). One constant for every Spark-side split/replace in
-#: this module — round-9 review found three string copies that could
-#: silently desynchronize tokenization from fingerprinting.
+#: vertical tab). The one definition for every Spark-side tokenizer
+#: and whitespace replace in the package (tokens, word_windows,
+#: fingerprint) — tests/test_whitespace_class.py fails on any other
+#: string literal that holds it.
 _WS_CLASS = r"[ \t\n\r\f]+"
+
+#: The same class for the winnowing kernel's Python-side
+#: canonicalization: Python \s is Unicode-aware and includes \v, so
+#: only the explicit class keeps kernel and oracle equal for ARBITRARY
+#: input (pinned by the differential hypothesis test), with Unicode
+#: case-folding exotica (lower() on e.g. 'İ') the only remaining
+#: documented boundary.
+_WS_RUN = re.compile(_WS_CLASS)
 
 
 def tokens(text: Column) -> Column:
@@ -70,6 +70,15 @@ def tokens(text: Column) -> Column:
 
 def token_count(text: Column) -> Column:
     return F.size(tokens(text))
+
+
+def word_windows(words: Column, k: int) -> Column:
+    """Sliding ``k``-word windows of a token array, each joined by one
+    space, in position order. An array shorter than ``k`` words yields
+    its one short window; a caller that wants none (a bigram count
+    over a one-word document) guards on ``F.size(words)``."""
+    idx = F.sequence(F.lit(1), F.greatest(F.size(words) - (k - 1), F.lit(1)))
+    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, k)))
 
 
 def bpe_ish_token_count(text: Column) -> Column:

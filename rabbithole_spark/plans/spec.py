@@ -57,7 +57,7 @@ from rabbithole_spark.streaming.sources import (
     register_amqp_source,
 )
 
-INPUT_TYPES = ("spool", "amqp", "rate")
+INPUT_TYPES = ("spool", "amqp")
 OUTPUT_TYPES = ("sql", "jdbc", "parquet", "memory", "spool")
 
 
@@ -266,19 +266,6 @@ def compile_pipeline(
                 from pyspark.sql import functions as F
 
                 env = env.filter(F.col("exchange") == exchange)
-        elif src.type == "rate":
-            from pyspark.sql import functions as F
-
-            env = (
-                spark.readStream.format("rate")
-                .option("rowsPerSecond", str(src.kwargs.get("rows_per_second", 5)))
-                .load()
-                .select(
-                    F.lit(src_ref.kwargs.get("exchange", "rate")).alias("exchange"),
-                    F.lit("application/json").alias("content_type"),
-                    F.to_json(F.struct("timestamp", "value")).alias("body"),
-                )
-            )
         else:
             raise PipelineError(f"Block {src.name!r} is not an input type")
 

@@ -3,10 +3,12 @@
 from __future__ import annotations
 
 from pyspark.sql import (
+    Column,
     DataFrame,
     SparkSession,
 )
 from pyspark.sql import functions as F
+from rabbithole_spark.operators.text_analysis import token_count, tokens
 from rabbithole_spark.session import table
 
 
@@ -97,6 +99,18 @@ _QUALITY_CASE_SQL = """CAST(CASE WHEN text IS NULL THEN NULL ELSE
 #: words per segment for the segment-level dedup rate
 _SEG_WORDS = 8
 
+def segments(words: Column) -> Column:
+    """Consecutive ``_SEG_WORDS``-word segments of a token array, each
+    joined by one space; the last may be short. One segment starts at
+    every ``_SEG_WORDS``-th word, so an n-word array has
+    ceil(n / _SEG_WORDS) segments, the count the oracles compute as
+    ``(len(w) + _SEG_WORDS - 1) // _SEG_WORDS``. Callers drop NULL text
+    first: the oracles' unnest never emits a row for it."""
+    return F.transform(
+        F.sequence(F.lit(1), F.size(words), F.lit(_SEG_WORDS)),
+        lambda i: F.concat_ws(" ", F.slice(words, i, _SEG_WORDS)),
+    )
+
 def _bm25_scores(
     spark: SparkSession, sf_dir: str, terms: list[str]
 ) -> DataFrame:
@@ -110,7 +124,7 @@ def _bm25_scores(
     d = table(spark, sf_dir, "documents")
     words = d.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\r\f]+")).alias("word"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("word"),
     )
     per_doc = words.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("dl"),
@@ -124,9 +138,7 @@ def _bm25_scores(
         # from the tokenized relation, which a NULL text never reaches
         # (round-6 NULL-text probe pin); avg already skips NULLs
         F.count("text").alias("n_docs"),
-        F.avg(
-            F.size(F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\r\f]+"))
-        ).alias("avgdl"),
+        F.avg(token_count(F.lower(F.col("text")))).alias("avgdl"),
     )
     tf = per_doc.select(
         "doc_id",

@@ -15,13 +15,17 @@ from rabbithole_spark.operators.dedup import (
     word_shingles,
 )
 from rabbithole_spark.operators.similarity import valid_embeddings
-from rabbithole_spark.operators.text_analysis import winnow_fingerprints
+from rabbithole_spark.operators.text_analysis import (
+    tokens,
+    winnow_fingerprints,
+)
 from rabbithole_spark.session import table
 from rabbithole_spark.queries.llm._common import (
     _SEG_WORDS,
     _WINNOW_ORACLE,
     _bcast_sorted_struct_array,
     _valid_embedding_sql,
+    segments,
 )
 
 
@@ -63,21 +67,8 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(table(spark, sf_dir, "documents")).filter(
         F.col("text").isNotNull()
     )
-    words = F.split(F.trim(F.col("text")), r"[ \t\n\r\f]+")
-    nseg = F.expr(
-        f"(size(split(trim(text), '[ \\\\t\\\\n\\\\r\\\\f]+')) + {_SEG_WORDS - 1}) "
-        f"div {_SEG_WORDS}"
-    )
     segs = d.select(
-        "source",
-        F.explode_outer(
-            F.transform(
-                F.sequence(F.lit(1), nseg),
-                lambda i: F.concat_ws(
-                    " ", F.slice(words, (i - 1) * _SEG_WORDS + 1, _SEG_WORDS)
-                ),
-            )
-        ).alias("seg"),
+        "source", F.explode_outer(segments(tokens(F.col("text")))).alias("seg")
     )
     per_seg = segs.groupBy("seg").agg(
         F.array_sort(F.collect_set("source")).alias("srcs")

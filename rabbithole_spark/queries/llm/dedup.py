@@ -19,7 +19,11 @@ from rabbithole_spark.operators.dedup import (
     word_shingles,
 )
 from rabbithole_spark.operators.similarity import valid_embeddings
-from rabbithole_spark.operators.text_analysis import fingerprint
+from rabbithole_spark.operators.text_analysis import (
+    fingerprint,
+    tokens,
+    word_windows,
+)
 from rabbithole_spark.session import table
 from rabbithole_spark.queries.llm._common import (
     _KMEANS_ITERS,
@@ -410,11 +414,8 @@ def dedup_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(
         table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     )
-    words = F.split(F.trim(F.col("text")), r"[ \t\n\r\f]+")
-    n = F.size(words)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
     gram_hashes = F.transform(
-        idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i, k)))
+        word_windows(tokens(F.col("text")), k), lambda g: F.xxhash64(g)
     )
     ex = d.select(
         "doc_id", F.explode_outer(gram_hashes).alias("h")
@@ -529,12 +530,9 @@ def dedup_repeated_span_coverage(
     d = spread(
         table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     )
-    words = F.split(F.trim(F.col("text")), r"[ \t\n\r\f]+")
+    words = tokens(F.col("text"))
     n = F.size(words).cast("long")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(words) - (k - 1), F.lit(1)))
-    gram_hashes = F.transform(
-        idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i, k)))
-    )
+    gram_hashes = F.transform(word_windows(words, k), lambda g: F.xxhash64(g))
     ex = d.select(
         "doc_id",
         n.alias("n_words"),

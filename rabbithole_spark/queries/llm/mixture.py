@@ -14,6 +14,7 @@ from rabbithole_spark.operators.dedup import spread
 from rabbithole_spark.operators.text_analysis import (
     quality_score,
     token_count,
+    tokens,
 )
 from rabbithole_spark.session import table
 from rabbithole_spark.queries.llm._common import _QUALITY_CASE_SQL
@@ -782,10 +783,7 @@ def mixture_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(table(spark, sf_dir, "documents")).filter(
         F.col("text").isNotNull()
     )
-    w = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\r\f]+"),
-        lambda x: x != "",
-    )
+    w = F.filter(tokens(F.lower(F.col("text"))), lambda x: x != "")
     # unigrams + bigrams in one generator pass; the bigram zip is over
     # two equal-length slices, so zip_with never NULL-pads
     bigrams = F.when(

@@ -13,6 +13,7 @@ from rabbithole_spark.operators.text_analysis import (
     fingerprint,
     punct_ratio,
     quality_score,
+    tokens,
 )
 from rabbithole_spark.session import table
 from rabbithole_spark.queries.llm._common import _QUALITY_CASE_SQL
@@ -130,9 +131,7 @@ def pipeline_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = (
         d.select(
             "doc_id",
-            F.explode(
-                F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\r\f]+")
-            ).alias("word"),
+            F.explode(tokens(F.lower(F.col("text")))).alias("word"),
         )
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("c"))

@@ -27,6 +27,7 @@ from rabbithole_spark.operators.text_analysis import (
     stopword_ratio,
     token_count,
     tokens,
+    word_windows,
 )
 from rabbithole_spark.session import table
 from rabbithole_spark.queries.llm._common import (
@@ -34,6 +35,7 @@ from rabbithole_spark.queries.llm._common import (
     _SEG_WORDS,
     _WINNOW_ORACLE,
     _bm25_scores,
+    segments,
 )
 
 
@@ -299,18 +301,8 @@ def text_segment_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(table(spark, sf_dir, "documents")).filter(
         F.col("text").isNotNull()
     )
-    words = F.split(F.trim(F.col("text")), r"[ \t\n\r\f]+")
-    nseg = F.expr(f"(size(split(trim(text), '[ \\\\t\\\\n\\\\r\\\\f]+')) + {_SEG_WORDS - 1}) div {_SEG_WORDS}")
     segs = d.select(
-        "doc_id",
-        F.explode_outer(
-            F.transform(
-                F.sequence(F.lit(1), nseg),
-                lambda i: F.concat_ws(
-                    " ", F.slice(words, (i - 1) * _SEG_WORDS + 1, _SEG_WORDS)
-                ),
-            )
-        ).alias("seg"),
+        "doc_id", F.explode_outer(segments(tokens(F.col("text")))).alias("seg")
     )
     counted = segs.withColumn(
         "n_occ", F.count(F.lit(1)).over(Window.partitionBy("seg"))
@@ -364,20 +356,9 @@ def text_remove_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(table(spark, sf_dir, "documents")).filter(
         F.col("text").isNotNull()
     )
-    words = F.split(F.trim(F.col("text")), r"[ \t\n\r\f]+")
-    nseg = F.expr(
-        f"(size(split(trim(text), '[ \\\\t\\\\n\\\\r\\\\f]+')) + {_SEG_WORDS - 1}) div {_SEG_WORDS}"
-    )
     segs = d.select(
         "doc_id",
-        F.posexplode_outer(
-            F.transform(
-                F.sequence(F.lit(1), nseg),
-                lambda i: F.concat_ws(
-                    " ", F.slice(words, (i - 1) * _SEG_WORDS + 1, _SEG_WORDS)
-                ),
-            )
-        ).alias("pos", "seg"),
+        F.posexplode_outer(segments(tokens(F.col("text")))).alias("pos", "seg"),
     )
     counted = segs.withColumn(
         "n_occ", F.count(F.lit(1)).over(Window.partitionBy("seg"))
@@ -416,14 +397,10 @@ FROM b GROUP BY ngram ORDER BY n DESC, ngram LIMIT 20
 )
 def text_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(table(spark, sf_dir, "documents"))
-    words = F.split(F.trim(F.col("text")), r"[ \t\n\r\f]+")
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.size(words) - 1),
-        lambda i: F.concat_ws(" ", F.slice(words, i, 2)),
-    )
+    words = tokens(F.col("text"))
     return (
         d.filter(F.size(words) >= 2)
-        .select(F.explode(bigrams).alias("ngram"))
+        .select(F.explode(word_windows(words, 2)).alias("ngram"))
         .groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), "ngram")
@@ -466,7 +443,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(table(spark, sf_dir, "documents"))
     words = d.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\r\f]+")).alias("word"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("word"),
     )
     # localCheckpoint: dfreq and the scoring join both consume tf; an
     # un-materialized tf would re-run scan+explode+agg per branch
@@ -581,9 +558,7 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = (
         d.select(
             "doc_id",
-            F.explode(
-                F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\r\f]+")
-            ).alias("word"),
+            F.explode(tokens(F.lower(F.col("text")))).alias("word"),
         )
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -669,19 +644,10 @@ LIMIT 20
 )
 def text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(table(spark, sf_dir, "documents"))
-    wf = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\r\f]+"),
-        lambda w: w != "",
-    )
+    wf = F.filter(tokens(F.lower(F.col("text"))), lambda w: w != "")
     words = d.select(wf.alias("wf")).localCheckpoint(eager=False)
     bigram_arr = F.when(
-        F.size("wf") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("wf") - 1),
-            lambda i: F.concat(
-                F.element_at("wf", i), F.lit(" "), F.element_at("wf", i + 1)
-            ),
-        ),
+        F.size("wf") >= 2, word_windows(F.col("wf"), 2)
     ).otherwise(F.array().cast("array<string>"))
     bg = (
         words.select(F.explode(bigram_arr).alias("bigram"))
@@ -778,10 +744,7 @@ def _lm_xent_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     text_quality_classifier (round 9). Docs with no tokens (NULL or
     whitespace-only text) have no rows in tf and drop out."""
     d = spread(table(spark, sf_dir, "documents"))
-    wf = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\r\f]+"),
-        lambda w: w != "",
-    )
+    wf = F.filter(tokens(F.lower(F.col("text"))), lambda w: w != "")
     words = d.select("doc_id", F.explode(wf).alias("word"))
     # counts and totals all derive from the (doc, word) tf relation, so
     # the corpus is tokenized and exploded exactly ONCE; tf is the
@@ -1262,9 +1225,7 @@ def text_gopher_rules(
     corpus's function words so both rule branches stay live — the
     oracle replays the default)."""
     d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    w = F.filter(
-        F.split(F.trim(F.col("text")), r"[ \t\n\r\f]+"), lambda x: x != ""
-    )
+    w = F.filter(tokens(F.col("text")), lambda x: x != "")
     # \r?\n delimiter: CRLF text must not leave a trailing \r on the
     # line (Java's $ matches BEFORE a final line terminator where
     # RE2's does not — round-9 review, empirically confirmed)

@@ -30,8 +30,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 #: The directory holding the ``rabbithole_spark`` package.
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -102,29 +100,6 @@ def prepare(spark: SparkSession) -> SparkSession:
     # genuinely runaway recursive CTE, never a cliff for real data.
     spark.conf.set("spark.sql.cteRecursionLevelLimit", "40000")
     return spark
-
-
-def use_rocksdb_state(spark: SparkSession) -> None:
-    """Switch streaming state to the RocksDB provider (spillable,
-    incremental-checkpointing) instead of the default in-JVM-heap
-    HDFS-backed map.
-
-    At scale, stateful operators (dedup, session windows, stream-stream
-    joins) hold state proportional to key cardinality x watermark
-    horizon; RocksDB keeps it off-heap and on local SSD with changelog
-    checkpointing, so executors stop OOMing on wide state. Session-wide
-    conf: set before starting the queries that need it."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    # changelog checkpointing ships deltas, not full SST snapshots
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing."
-        "enabled",
-        "true",
-    )
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -47,44 +47,6 @@ def test_listener_collects_batch_metrics(spark, tmp_path):
         spark.streams.removeListener(listener)
 
 
-def test_rocksdb_state_store_runs_stateful_query(spark, tmp_path):
-    """A watermarked streaming dedup executes on the RocksDB state
-    store provider (verified from the query's own state-operator
-    metrics), producing the same rows as the default provider."""
-    from rabbithole_spark.session import use_rocksdb_state
-
-    src = str(tmp_path / "rocks_src")
-    ev = table(spark, SF, "events").select("user_id", "event_type", "ts")
-    ev.coalesce(1).write.parquet(src)
-    expected = ev.select("user_id", "event_type").distinct().count()
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state(spark)
-    name = f"rocks_{uuid.uuid4().hex[:8]}"
-    try:
-        q = (
-            spark.readStream.schema("user_id long, event_type string, ts timestamp")
-            .format("parquet").load(src)
-            .withWatermark("ts", "1 hour")
-            .dropDuplicates(["user_id", "event_type"])
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        progress = q.lastProgress
-        ops = progress["stateOperators"] if progress else []
-        assert any("rocksdb" in k.lower()
-                   for op in ops for k in (op.get("customMetrics") or {})), ops
-        assert spark.table(name).count() == expected
-    finally:
-        if prev:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_listener_keys_unnamed_queries_consistently():
     """PySpark 4's QueryStartedEvent.id is a uuid.UUID while progress
     events stringify — both callbacks must normalize to str or every

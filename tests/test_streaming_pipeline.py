@@ -493,8 +493,9 @@ def test_sql_error_swallowed(spark, spool, tmp_path, caplog):
 
 
 def test_config_errors():
-    with pytest.raises(PipelineError):
-        PipelineSpec.from_dict({"blocks": [{"name": "x", "type": "bogus"}]})
+    for block_type in ("bogus", "rate"):  # "rate": a deleted input type
+        with pytest.raises(PipelineError, match="Unknown block type"):
+            PipelineSpec.from_dict({"blocks": [{"name": "x", "type": block_type}]})
     with pytest.raises(PipelineError):
         PipelineSpec.from_dict(
             {"blocks": [{"name": "x", "type": "spool"}], "flows": [["x", "nope"]]}

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import math
 import pathlib
+import re
 
 import duckdb
 import pytest
@@ -24,17 +25,14 @@ from rabbithole_spark.catalog import load_all
 
 _PKG = pathlib.Path(__file__).resolve().parents[1] / "rabbithole_spark"
 
-def _flagged_string_literals(source: str):
-    """Yield (lineno, literal_source) for every single-line string
-    literal whose EVALUATED content carries a ``\\s`` regex escape that
-    is not inside an embedded SQL single-quoted literal.
+def _single_line_literals(source: str):
+    """Yield (lineno, literal_source, content) for every string literal
+    that is not triple-quoted (triple-quoted strings are oracle SQL
+    blocks: the DuckDB side of the contract, exempt by design).
 
-    Tokenizes real Python (mid-pattern ``r"(\\s)+"`` is caught, not
-    just a leading ``r"\\s"``). Exemptions: triple-quoted strings are
-    oracle SQL blocks, and a ``'`` before the ``\\s`` in the content
-    marks an embedded SQL fragment like
-    ``"...string_split_regex(text, '\\\\s+')..."`` — DuckDB's RE2
-    ``\\s`` is the correct class there.
+    Tokenizes real Python, so a pattern mid-literal is seen too.
+    ``content`` is the evaluated string; f-strings cannot be evaluated
+    statically, so theirs is the raw body text.
     """
     import ast
     import io
@@ -47,20 +45,29 @@ def _flagged_string_literals(source: str):
         body = lit.lstrip("rRbBuUfF")
         if body.startswith(('"""', "'''")):
             continue  # oracle SQL block
-        if lit.lstrip("rRbBuU").startswith("f") or "f" in lit[: len(lit) - len(body)].lower():
-            # f-strings: ast.literal_eval can't evaluate them; fall back
-            # to the raw body text for the content check
+        if "f" in lit[: len(lit) - len(body)].lower():
             content = body.strip("\"'")
         else:
             try:
                 content = ast.literal_eval(lit)
             except Exception:
                 content = body.strip("\"'")
-        if not isinstance(content, str):
-            continue
+        if isinstance(content, str):
+            yield tok.start[0], lit, content
+
+
+def _flagged_string_literals(source: str):
+    """Yield (lineno, literal_source) for every single-line string
+    literal whose content carries a ``\\s`` regex escape that is not
+    inside an embedded SQL single-quoted literal: a ``'`` before the
+    ``\\s`` marks a fragment like
+    ``"...string_split_regex(text, '\\\\s+')..."``, where DuckDB's RE2
+    ``\\s`` is the correct class.
+    """
+    for lineno, lit, content in _single_line_literals(source):
         idx = content.find("\\s")
         if idx >= 0 and "'" not in content[:idx]:
-            yield tok.start[0], lit
+            yield lineno, lit
 
 
 def test_no_java_whitespace_class_in_spark_side_regexes():
@@ -72,6 +79,50 @@ def test_no_java_whitespace_class_in_spark_side_regexes():
         "Java \\s regex (includes \\x0b, diverges from RE2/DuckDB) found "
         "in Spark-side string literals — use the explicit [ \\t\\n\\r\\f]+ "
         "class (operators/text_analysis.tokens):\n" + "\n".join(offenders)
+    )
+
+
+_WS_MEMBERS = {" ", "\\t", "\\n", "\\r", "\\f"}
+
+
+def _holds_whitespace_class(content: str) -> bool:
+    """True when ``content`` holds the bracket class of exactly the
+    five tokenizer whitespace characters, in any order and under any
+    number of escape layers: a raw regex (``[ \\t...]``), real control
+    characters, or the doubled backslashes of a SQL string inside an
+    f-string all count."""
+    norm = re.sub(r"\\+", r"\\", content)
+    for char, esc in (("\t", "\\t"), ("\n", "\\n"), ("\r", "\\r"), ("\f", "\\f")):
+        norm = norm.replace(char, esc)
+    return any(
+        set(re.findall(r"\\[tnrf]| ", m.group(1))) == _WS_MEMBERS
+        for m in re.finditer(r"\[((?:\\[tnrf]| )+)\]", norm)
+    )
+
+
+def test_whitespace_class_is_defined_once():
+    """The tokenization contract has one Spark-side owner:
+    ``text_analysis._WS_CLASS``. Any other non-triple-quoted literal
+    holding the class is a copy that a later edit can put out of step
+    with the tokenizer (``tokens``, ``word_windows``, ``fingerprint``
+    and every query built on them)."""
+    owner = _PKG / "operators" / "text_analysis.py"
+    hits = [
+        (path, lineno, lit)
+        for path in sorted(_PKG.rglob("*.py"))
+        for lineno, lit, content in _single_line_literals(path.read_text())
+        if _holds_whitespace_class(content)
+    ]
+    owner_lines = owner.read_text().splitlines()
+    copies = [
+        f"{path}:{lineno}: {lit[:80]}"
+        for path, lineno, lit in hits
+        if not (path == owner and owner_lines[lineno - 1].startswith("_WS_CLASS = "))
+    ]
+    assert len(hits) - len(copies) == 1, "text_analysis._WS_CLASS not found"
+    assert not copies, (
+        "whitespace class written out again; use text_analysis.tokens "
+        "(or _WS_CLASS) instead:\n" + "\n".join(copies)
     )
 
 
